@@ -100,12 +100,6 @@ def render_glyph(latin: str) -> np.ndarray:
     return np.kron(bits, np.ones((8, 8), dtype=np.uint8)) * np.uint8(255)
 
 
-def prototype_matrix() -> tuple[np.ndarray, str]:
-    """(26, 64) uint8 bit matrix of the pinned full-glyph hashes + letter order."""
-    mat = np.stack([hash_to_bits(LATIN_TO_HASH[c]) for c in LETTERS])
-    return mat, LETTERS
-
-
 @dataclass(frozen=True)
 class ClassifierState:
     """Immutable per-worker classifier state (built once per Python worker).

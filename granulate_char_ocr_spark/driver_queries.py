@@ -577,17 +577,6 @@ def quality_filter_docs(spark, sf_dir):
     return curation.quality_filter(inj, min_kept_lines=1)
 
 
-# gate slot freed for mm_audio_features (r4): O5 sorted-unique left the
-# 50-entry graded surface but stays pytest-covered
-# (tests/test_plans.py::test_sorted_unique_event_types) — its
-# distinct+sort shape is also visible via the rank/top-k entries
-def sorted_unique_event_types(spark, sf_dir):
-    """distinct + order (SURVEY §2.6 O5)."""
-    return _t(spark, sf_dir, "events").select("event_type").distinct().orderBy(
-        "event_type"
-    )
-
-
 # (mode_event_type_per_user left the 50-entry gate window in r4 for the
 # curation family: the A12 grouped-mode/vote semantics stay gate-visible
 # via ocr_extract_noisy's pinned 'vote' method tier, and the exact parity
@@ -891,25 +880,6 @@ def pdf_extract_docs(spark, sf_dir):
     key_type = docs.schema["doc_id"].dataType.simpleString()
     pdfs = docs.mapInPandas(build, f"doc_id {key_type}, payload binary")
     return pdf_texts(pdfs, layout=True)
-
-
-# gate slot freed for html_main_content_docs (r4): the TPC-H q13 shape
-# left the 50-entry graded surface but stays pytest-covered
-# (tests/test_plans.py::test_customer_order_distribution) — its
-# outer-join + two-level aggregate shape is also visible via
-# rollup_order_priority and distinct_users_per_type
-def customer_order_distribution(spark, sf_dir):
-    """TPC-H q13 shape — outer join preserving empty groups, then a second
-    aggregation over the group sizes (the two-level aggregate no single
-    groupBy can express; zero-order customers must survive the join)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
 
 
 # (percentile_order_prices left the 50-entry gate window in r4 in favor

@@ -70,76 +70,3 @@ def mel_features(
     fb = mel_filterbank(n_mels, frame, rate)
     band = power @ fb.T  # (n_frames, n_mels)
     return np.log1p(band.mean(axis=0)).astype(np.float32)
-
-
-def activity_segments(
-    samples: np.ndarray,
-    rate: float,
-    frame: int = FRAME,
-    hop: int = HOP,
-    threshold_db: float = -35.0,
-    min_ms: float = 100.0,
-) -> list[tuple[float, float, bool]]:
-    """Energy VAD: mono samples -> [(start_sec, end_sec, active), …]
-    partitioning the whole clip (hop-aligned boundaries, the last
-    segment extended to the clip end — segments are disjoint and their
-    durations sum to the clip length). A frame is active when its RMS
-    is within ``threshold_db`` of the clip's peak frame (relative
-    threshold — no absolute level assumption). Hangover smoothing is
-    the standard two-pass morphology, each pass LINEAR in the frame
-    count (review finding r4: the earlier flip-and-rescan loop was
-    quadratic on near-threshold noise): first drop active runs shorter
-    than ``min_ms`` (clicks don't open segments), then fill interior
-    inactive gaps shorter than ``min_ms`` (breaths don't close them).
-    Deterministic, pure NumPy, no model."""
-    x = np.asarray(samples, dtype=np.float64)
-    if len(x) == 0:
-        return []
-    if len(x) < frame:
-        x = np.pad(x, (0, frame - len(x)))
-    n_frames = 1 + (len(x) - frame) // hop
-    idx = np.arange(frame)[None, :] + hop * np.arange(n_frames)[:, None]
-    rms = np.sqrt((x[idx] ** 2).mean(axis=1))
-    peak = rms.max()
-    if peak <= 0:
-        active = np.zeros(n_frames, dtype=bool)
-    else:
-        with np.errstate(divide="ignore"):
-            db = 20.0 * np.log10(rms / peak)
-        active = db > threshold_db
-    min_frames = max(1, int(round(min_ms / 1000.0 * rate / hop)))
-    # pass 1: drop short ACTIVE runs
-    for s, e, a in _runs(active):
-        if a and e - s < min_frames:
-            active[s:e] = False
-    # pass 2: fill short INTERIOR inactive gaps (leading/trailing
-    # silence is real silence, not a gap between speech)
-    runs = _runs(active)
-    for i, (s, e, a) in enumerate(runs):
-        if not a and e - s < min_frames and 0 < i < len(runs) - 1:
-            active[s:e] = True
-    # hop-aligned disjoint boundaries; final segment takes the tail
-    # (frames overlap by frame-hop samples — attributing each boundary
-    # to the hop grid keeps segments disjoint and exhaustive)
-    runs = _runs(active)
-    out = []
-    for i, (s, e, a) in enumerate(runs):
-        start = s * hop / rate
-        end = (
-            len(samples) / rate
-            if i == len(runs) - 1
-            else e * hop / rate
-        )
-        out.append((start, end, bool(a)))
-    return out
-
-
-def _runs(mask: np.ndarray) -> list[tuple[int, int, bool]]:
-    """[(start, end, value), …] run-length segments of a bool array."""
-    out = []
-    s = 0
-    for i in range(1, len(mask) + 1):
-        if i == len(mask) or mask[i] != mask[s]:
-            out.append((s, i, bool(mask[s])))
-            s = i
-    return out

@@ -298,48 +298,6 @@ def decode_gif(data: bytes) -> np.ndarray:
     raise ValueError("GIF: no image descriptor")
 
 
-def encode_gif_frames(
-    frames: list[np.ndarray],
-    palette: np.ndarray,
-    delay_cs: int = 10,
-    transparent: int | None = None,
-) -> bytes:
-    """Animated GIF89a: each uint8 (H, W) index frame full-size with its
-    own graphic-control extension (disposal 1 = leave in place,
-    ``delay_cs`` hundredths of a second per frame)."""
-    if not frames:
-        raise ValueError("encode_gif_frames: no frames")
-    frames = [np.ascontiguousarray(f, dtype=np.uint8) for f in frames]
-    h, w = frames[0].shape
-    if any(f.shape != (h, w) for f in frames):
-        raise ValueError("encode_gif_frames: frames must share one size")
-    palette = np.ascontiguousarray(palette, dtype=np.uint8)
-    depth = max(int(len(palette) - 1).bit_length(), 1)
-    if max(int(f.max(initial=0)) for f in frames) >= (1 << depth):
-        raise ValueError("encode_gif_frames: index out of palette range")
-    gct = np.zeros((1 << depth, 3), dtype=np.uint8)
-    gct[: len(palette)] = palette
-    out = bytearray(
-        b"GIF89a"
-        + struct.pack(
-            "<HHBBB", w, h, 0x80 | ((depth - 1) << 4) | (depth - 1), 0, 0
-        )
-        + gct.tobytes()
-    )
-    min_code = max(depth, 2)
-    flags = (1 << 2) | (0x01 if transparent is not None else 0)
-    for f in frames:
-        out += (
-            b"\x21\xf9\x04"
-            + struct.pack("<BHB", flags, delay_cs, transparent or 0)
-            + b"\x00"
-        )
-        out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0)
-        out += bytes([min_code]) + _subblocks(_lzw_encode(f, min_code))
-    out += b"\x3b"
-    return bytes(out)
-
-
 def iter_gif_frames(data: bytes, max_frames: int = 10000):
     """Yield composed animation frames one at a time: uint8 (H, W, 3)
     RGB at the logical screen size, honoring sub-rectangle frames,

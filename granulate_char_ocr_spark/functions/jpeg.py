@@ -17,9 +17,9 @@ emit (VERDICT r2 item 4: a photo corpus is ~100% color JPEG). Chroma
 upsampling is pixel replication (JFIF mandates no filter). Restart
 intervals (DRI/RSTn, the camera resync convention) encode and decode in
 both modes: the entropy stream splits at RSTn markers into byte-aligned
-segments with DC predictors and EOB runs reset. The progressive encoder
-uses the IJG-style default scan script with per-scan optimal Huffman
-tables built by the Annex K.2 procedure. Arithmetic coding and
+segments with DC predictors and EOB runs reset. The encoder writes
+baseline only (progressive fixtures come from the test suite's writer).
+Arithmetic coding and
 hierarchical mode stay rejected with the reason. The decoder reads quantization
 and Huffman tables FROM the stream (DQT/DHT), so third-party baseline
 files decode correctly; the encoder embeds its tables (Annex K luma +
@@ -218,12 +218,6 @@ class _BitWriter:
         if self._n:
             pad = 8 - self._n
             self.write((1 << pad) - 1, pad)  # 1-fill per spec
-
-
-def _destuff_scan(data: bytes, pos: int) -> bytes:
-    """Entropy-coded segment with stuffed zeros removed (stops at the first
-    real marker)."""
-    return _destuff_scan_segments(data, pos)[0][0]
 
 
 def _destuff_scan_segments(
@@ -1014,368 +1008,3 @@ def _alloc_prog_store(sof_comps, h: int, w: int) -> dict:
         "mcus_x": mcus_x,
         "mcus_y": mcus_y,
     }
-
-
-# ---------------------------------------------------------------------------
-# progressive encoder (T.81 Annex G encoding procedures + Annex K.2 optimal
-# Huffman table generation)
-# ---------------------------------------------------------------------------
-
-def _optimal_huffman(freq256: list[int]) -> tuple[list[int], list[int]]:
-    """Optimal length-limited Huffman table from symbol frequencies, per
-    T.81 Annex K.2 (Figures K.1-K.4): code-size assignment by pairwise
-    merge with the ``others`` chain, BITS counting, the >16-bit
-    redistribution, and removal of the reserved all-ones pseudo-symbol
-    (index 256). Returns (bits[16], huffval) for a DHT segment."""
-    if not any(freq256[:256]):
-        return [1] + [0] * 15, [0]  # degenerate: one dummy 1-bit code
-    freq = list(freq256[:256]) + [1]  # reserve the pseudo-symbol
-    codesize = [0] * 257
-    others = [-1] * 257
-    while True:
-        nz = [(f, -i) for i, f in enumerate(freq) if f > 0]
-        if len(nz) < 2:
-            break
-        nz.sort()
-        v1, v2 = -nz[0][1], -nz[1][1]  # two least-frequent; largest index wins ties
-        freq[v1] += freq[v2]
-        freq[v2] = 0
-        codesize[v1] += 1
-        while others[v1] != -1:
-            v1 = others[v1]
-            codesize[v1] += 1
-        others[v1] = v2
-        codesize[v2] += 1
-        while others[v2] != -1:
-            v2 = others[v2]
-            codesize[v2] += 1
-    bits = [0] * 33
-    for s in range(257):
-        if codesize[s]:
-            bits[codesize[s]] += 1
-    i = 32  # K.3: fold code lengths > 16 back into the tree
-    while i > 16:
-        while bits[i] > 0:
-            j = i - 2
-            while bits[j] == 0:
-                j -= 1
-            bits[i] -= 2
-            bits[i - 1] += 1
-            bits[j + 1] += 2
-            bits[j] -= 1
-        i -= 1
-    while bits[i] == 0:
-        i -= 1
-    bits[i] -= 1  # drop the pseudo-symbol (it held the all-ones code)
-    vals = sorted(
-        (s for s in range(256) if codesize[s]),
-        key=lambda s: (codesize[s], s),
-    )
-    return bits[1:17], vals
-
-
-def _tok_flush_eob(tokens: list, tid: int, eobrun: int, pend: list) -> int:
-    """Emit an EOBn symbol for the accumulated block run (run length
-    2^n + extension bits, T.81 G.1.2.2) followed by any buffered
-    refinement correction bits."""
-    if eobrun:
-        n = eobrun.bit_length() - 1
-        tokens.append(("s", 1, tid, n << 4))
-        if n:
-            tokens.append(("b", eobrun - (1 << n), n))
-        for bit in pend:
-            tokens.append(("b", bit, 1))
-        pend.clear()
-    return 0
-
-
-def _tok_dc_scan(tokens, scan, zz_of, ah, al, restart_interval, mcus_x, mcus_y):
-    """DC scan tokens: first pass (Ah=0) Huffman-codes diffs of the
-    point-transformed DC (arithmetic shift, G.1.2.1); refinement emits the
-    single next-lower bit per block."""
-    if len(scan) > 1:
-        units = [
-            (ci, (my * c["vi"] + v) * c["stride"] + (mx * c["hi"] + u))
-            for my in range(mcus_y)
-            for mx in range(mcus_x)
-            for ci, c in enumerate(scan)
-            for v in range(c["vi"])
-            for u in range(c["hi"])
-        ]
-        per_mcu = sum(c["hi"] * c["vi"] for c in scan)
-    else:
-        c = scan[0]
-        units = [
-            (0, by * c["stride"] + bx)
-            for by in range(c["nbh"])
-            for bx in range(c["nbw"])
-        ]
-        per_mcu = 1
-    pred = [0] * len(scan)
-    for i, (ci, b) in enumerate(units):
-        if i % per_mcu == 0:
-            mcu = i // per_mcu
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                tokens.append(("r",))
-                pred = [0] * len(scan)
-        dc = int(zz_of(ci)[b][0])
-        if ah == 0:
-            v = dc >> al
-            diff = v - pred[ci]
-            pred[ci] = v
-            s = _category(diff)
-            tokens.append(("s", 0, scan[ci]["dc_tid"], s))
-            if s:
-                tokens.append(("b", _encode_magnitude(diff, s), s))
-        else:
-            tokens.append(("b", (dc >> al) & 1, 1))
-
-
-def _tok_ac_first(tokens, c, zz, ss, se, al, restart_interval):
-    """AC first-pass scan tokens (Ah=0): run-length + EOBn block runs over
-    the point-transformed band (magnitude truncation toward zero,
-    G.1.2.2)."""
-    tid = c["ac_tid"]
-    eobrun = 0
-    pend: list = []
-    unit = 0
-    for by in range(c["nbh"]):
-        for bx in range(c["nbw"]):
-            if restart_interval and unit and unit % restart_interval == 0:
-                eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-                tokens.append(("r",))
-            unit += 1
-            row = zz[by * c["stride"] + bx]
-            nz = []
-            for k in range(ss, se + 1):
-                cv = int(row[k])
-                v = (abs(cv) >> al) * (1 if cv >= 0 else -1)
-                if v:
-                    nz.append((k, v))
-            if not nz:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-                continue
-            eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-            prev = ss - 1
-            for k, v in nz:
-                run = k - prev - 1
-                while run > 15:
-                    tokens.append(("s", 1, tid, 0xF0))
-                    run -= 16
-                s = _category(v)
-                tokens.append(("s", 1, tid, (run << 4) | s))
-                tokens.append(("b", _encode_magnitude(v, s), s))
-                prev = k
-            if prev < se:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-    _tok_flush_eob(tokens, tid, eobrun, pend)
-
-
-def _tok_ac_refine(tokens, c, zz, ss, se, al, restart_interval):
-    """AC refinement scan tokens (Ah=Al+1, G.1.2.3): symbols address
-    zero-history positions; correction bits for crossed nonzero-history
-    coefficients are emitted positionally after each symbol, and EOB-run
-    correction bits are buffered until the EOBn flush — mirroring exactly
-    the consumption order of the decode procedure."""
-    tid = c["ac_tid"]
-    eobrun = 0
-    pend: list = []
-    unit = 0
-    for by in range(c["nbh"]):
-        for bx in range(c["nbw"]):
-            if restart_interval and unit and unit % restart_interval == 0:
-                eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-                tokens.append(("r",))
-            unit += 1
-            row = zz[by * c["stride"] + bx]
-            band = [int(row[k]) for k in range(ss, se + 1)]
-            absv = [abs(v) >> al for v in band]
-            new_pos = [i for i, a in enumerate(absv) if a == 1]
-            if not new_pos:
-                # whole block joins the EOB run; buffer its correction bits
-                pend.extend(a & 1 for a in absv if a > 1)
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-                continue
-            eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-            cursor = 0
-            for kn in new_pos:
-                events = [
-                    (absv[i] & 1) if absv[i] > 1 else None  # None = zero-history
-                    for i in range(cursor, kn)
-                ]
-                zeros = sum(1 for e in events if e is None)
-                idx = 0
-                while zeros > 15:
-                    tokens.append(("s", 1, tid, 0xF0))
-                    crossed = 0
-                    while crossed < 16:
-                        e = events[idx]
-                        idx += 1
-                        if e is None:
-                            crossed += 1
-                        else:
-                            tokens.append(("b", e, 1))
-                    zeros -= 16
-                tokens.append(("s", 1, tid, (zeros << 4) | 1))
-                tokens.append(("b", 1 if band[kn] > 0 else 0, 1))
-                for e in events[idx:]:
-                    if e is not None:
-                        tokens.append(("b", e, 1))
-                cursor = kn + 1
-            if cursor <= se - ss:
-                pend.extend(
-                    absv[i] & 1
-                    for i in range(cursor, se - ss + 1)
-                    if absv[i] > 1
-                )
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    eobrun = _tok_flush_eob(tokens, tid, eobrun, pend)
-    _tok_flush_eob(tokens, tid, eobrun, pend)
-
-
-# IJG-style default progressive scan script: DC first at Al=1, luma AC in
-# two spectral bands at Al=2 with two refinement passes, chroma AC in one
-# band at Al=1 with one refinement, DC refinement for all components.
-# (component indices, Ss, Se, Ah, Al)
-_PROG_SCRIPT_GRAY = [
-    ((0,), 0, 0, 0, 1),
-    ((0,), 1, 5, 0, 2),
-    ((0,), 6, 63, 0, 2),
-    ((0,), 1, 63, 2, 1),
-    ((0,), 0, 0, 1, 0),
-    ((0,), 1, 63, 1, 0),
-]
-_PROG_SCRIPT_COLOR = [
-    ((0, 1, 2), 0, 0, 0, 1),
-    ((0,), 1, 5, 0, 2),
-    ((2,), 1, 63, 0, 1),
-    ((1,), 1, 63, 0, 1),
-    ((0,), 6, 63, 0, 2),
-    ((0,), 1, 63, 2, 1),
-    ((0, 1, 2), 0, 0, 1, 0),
-    ((2,), 1, 63, 1, 0),
-    ((1,), 1, 63, 1, 0),
-    ((0,), 1, 63, 1, 0),
-]
-
-
-def encode_jpeg_progressive(
-    img: np.ndarray,
-    quality: int = 90,
-    subsampling: str = "4:2:0",
-    restart_interval: int = 0,
-) -> bytes:
-    """uint8 image -> progressive JPEG (SOF2) with the IJG-style default
-    scan script (spectral selection + successive approximation) and
-    per-scan optimal Huffman tables (Annex K.2), re-declared via DHT
-    before each scan. Coefficient-exact vs the baseline encoder: decoding
-    yields pixel-identical output to ``decode_jpeg(encode_jpeg(img))`` at
-    the same quality/subsampling."""
-    (gray, h, w, frame_comps, qt_l, qt_c, mcus_x, mcus_y, zz_per_comp) = (
-        _prepare_frame(img, quality, subsampling)
-    )
-    hmax = max(c[1] for c in frame_comps)
-    vmax = max(c[2] for c in frame_comps)
-    comps = []
-    for i, (cid, hi, vi, qid) in enumerate(frame_comps):
-        cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)
-        comps.append(
-            {
-                "cid": cid,
-                "hi": hi,
-                "vi": vi,
-                "qid": qid,
-                "stride": mcus_x * hi,
-                "nbw": -(-cw // 8),
-                "nbh": -(-ch // 8),
-                "dc_tid": 0 if qid == 0 else 1,
-                "ac_tid": 0 if qid == 0 else 1,
-            }
-        )
-    script = _PROG_SCRIPT_GRAY if gray else _PROG_SCRIPT_COLOR
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = bytes([0x00]) + qt_l.reshape(-1)[_ZIGZAG].astype(np.uint8).tobytes()
-    if not gray:
-        dqt += (
-            bytes([0x01])
-            + qt_c.reshape(-1)[_ZIGZAG].astype(np.uint8).tobytes()
-        )
-    sof = seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, h, w, len(comps))
-        + b"".join(
-            bytes([c["cid"], (c["hi"] << 4) | c["vi"], c["qid"]])
-            for c in comps
-        ),
-    )
-    out = bytearray(b"\xff\xd8" + seg(0xFFDB, dqt) + sof)
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-
-    for (cis, ss, se, ah, al) in script:
-        scan = [comps[ci] for ci in cis]
-        tokens: list = []
-        if ss == 0:
-            _tok_dc_scan(
-                tokens, scan, lambda ci: zz_per_comp[cis[ci]], ah, al,
-                restart_interval, mcus_x, mcus_y,
-            )
-        elif ah == 0:
-            _tok_ac_first(
-                tokens, scan[0], zz_per_comp[cis[0]], ss, se, al,
-                restart_interval,
-            )
-        else:
-            _tok_ac_refine(
-                tokens, scan[0], zz_per_comp[cis[0]], ss, se, al,
-                restart_interval,
-            )
-        # per-scan optimal tables from this scan's symbol stream
-        freqs: dict[tuple[int, int], list[int]] = {}
-        for t in tokens:
-            if t[0] == "s":
-                freqs.setdefault((t[1], t[2]), [0] * 257)[t[3]] += 1
-        dht = b""
-        enc_tables: dict[tuple[int, int], dict] = {}
-        for (tc, tid), fr in sorted(freqs.items()):
-            bits, vals = _optimal_huffman(fr)
-            dht += bytes([(tc << 4) | tid]) + bytes(bits) + bytes(vals)
-            enc_tables[(tc, tid)] = _build_huffman(bits, vals)[0]
-        if dht:
-            out += seg(0xFFC4, dht)
-        sos = seg(
-            0xFFDA,
-            bytes([len(scan)])
-            + b"".join(
-                bytes([c["cid"], (c["dc_tid"] << 4) | c["ac_tid"]])
-                for c in scan
-            )
-            + bytes([ss, se, (ah << 4) | al]),
-        )
-        out += sos
-        bw = _BitWriter()
-        rst = 0
-        for t in tokens:
-            if t[0] == "s":
-                code, length = enc_tables[(t[1], t[2])][t[3]]
-                bw.write(code, length)
-            elif t[0] == "b":
-                bw.write(t[1], t[2])
-            else:  # restart boundary
-                bw.flush()
-                bw.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-        bw.flush()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -9,7 +9,7 @@ reference pipeline (citations are reference file:line; see SURVEY.md §2.8):
   threshold             ocr_service.py:195       (F4, fixed 128)
   otsu_threshold        optimize_preprocessing.py:81 (F5)
   adaptive_threshold    preprocess_color_images.py:133-136 (F6)
-  dilate/erode/open/close  ocr_service.py:198-199,346-347 (F7)
+  dilate/erode/close    ocr_service.py:198-199,346-347 (F7)
   resize_area           ocr_service.py:353-357 / granulate_alphabet_generated.py:73 (F8)
   pad_to_square         ocr_service.py:359-367   (F9)
   gaussian_blur3        ocr_service.py:370       (F10)
@@ -155,10 +155,6 @@ def morph_close(img: np.ndarray, kh: int = 2, kw: int = 2) -> np.ndarray:
     return erode(dilate(img, kh, kw), kh, kw)
 
 
-def morph_open(img: np.ndarray, kh: int = 2, kw: int = 2) -> np.ndarray:
-    return dilate(erode(img, kh, kw), kh, kw)
-
-
 # ---------------------------------------------------------------------------
 # resize / pad / blur
 # ---------------------------------------------------------------------------
@@ -215,80 +211,6 @@ def gaussian_blur3(img: np.ndarray) -> np.ndarray:
     p2 = np.pad(horiz, ((1, 1), (0, 0)), mode="edge")
     out = (p2[:-2] + 2 * p2[1:-1] + p2[2:]) / 4.0
     return np.clip(out, 0, 255).astype(np.uint8)
-
-
-def bilateral_filter(
-    img: np.ndarray, d: int = 9, sigma_color: float = 75.0, sigma_space: float = 75.0
-) -> np.ndarray:
-    """Edge-preserving bilateral filter — the reference's denoise step
-    (``cv2.bilateralFilter(gray, 9, 75, 75)``, ocr_service.py:188),
-    reimplemented from the published definition: each output pixel is the
-    intensity-weighted Gaussian mean over a d×d window,
-    w = exp(-Δxy²/2σs²) · exp(-ΔI²/2σc²). Vectorized over the whole image
-    via d² shifted views (no per-pixel Python). Functional reproduction, not
-    bit-exact parity with cv2's fixed-point path (SURVEY §7 R2 — the
-    deterministic fixture contract still excludes it; the robust/noisy
-    pipeline may use it)."""
-    a = img.astype(np.float64)
-    r = d // 2
-    padded = np.pad(a, r, mode="edge")
-    h, w = a.shape
-    num = np.zeros_like(a)
-    den = np.zeros_like(a)
-    inv2ss = -0.5 / (sigma_space**2)
-    inv2sc = -0.5 / (sigma_color**2)
-    for dy in range(-r, r + 1):
-        for dx in range(-r, r + 1):
-            shifted = padded[r + dy : r + dy + h, r + dx : r + dx + w]
-            wgt = np.exp((dy * dy + dx * dx) * inv2ss + (shifted - a) ** 2 * inv2sc)
-            num += wgt * shifted
-            den += wgt
-    return np.clip(np.round(num / den), 0, 255).astype(np.uint8)
-
-
-def clahe(
-    img: np.ndarray, clip_limit: float = 2.0, tiles: int = 8
-) -> np.ndarray:
-    """Contrast-limited adaptive histogram equalization — the reference's
-    contrast step (``cv2.createCLAHE(clipLimit=2.0, tileGridSize=(8,8))``,
-    ocr_service.py:191), from the published algorithm: per-tile histograms
-    clipped at ``clip_limit × mean-bin-height`` with the excess
-    redistributed uniformly, per-tile equalization CDFs, and bilinear
-    interpolation between the four surrounding tile mappings per pixel.
-    Functional reproduction of the algorithm, not cv2-bit-exact."""
-    h, w = img.shape
-    th, tw = max(1, h // tiles), max(1, w // tiles)
-    ny, nx = (h + th - 1) // th, (w + tw - 1) // tw
-    # per-tile clipped-equalization lookup tables
-    luts = np.empty((ny, nx, 256), dtype=np.float64)
-    for ty in range(ny):
-        for tx in range(nx):
-            tile = img[ty * th : min((ty + 1) * th, h), tx * tw : min((tx + 1) * tw, w)]
-            hist = np.bincount(tile.reshape(-1), minlength=256).astype(np.float64)
-            limit = max(clip_limit * tile.size / 256.0, 1.0)
-            excess = np.maximum(hist - limit, 0.0).sum()
-            hist = np.minimum(hist, limit) + excess / 256.0
-            cdf = hist.cumsum()
-            cdf /= max(cdf[-1], 1.0)
-            luts[ty, tx] = np.round(cdf * 255.0)
-    # bilinear interpolation between the 4 surrounding tile LUTs
-    yy, xx = np.mgrid[0:h, 0:w]
-    fy = (yy + 0.5) / th - 0.5
-    fx = (xx + 0.5) / tw - 0.5
-    y0 = np.clip(np.floor(fy).astype(int), 0, ny - 1)
-    x0 = np.clip(np.floor(fx).astype(int), 0, nx - 1)
-    y1 = np.minimum(y0 + 1, ny - 1)
-    x1 = np.minimum(x0 + 1, nx - 1)
-    wy = np.clip(fy - y0, 0.0, 1.0)
-    wx = np.clip(fx - x0, 0.0, 1.0)
-    v = img.astype(int)
-    out = (
-        luts[y0, x0, v] * (1 - wy) * (1 - wx)
-        + luts[y1, x0, v] * wy * (1 - wx)
-        + luts[y0, x1, v] * (1 - wy) * wx
-        + luts[y1, x1, v] * wy * wx
-    )
-    return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
 
 def _rotate_nn(img: np.ndarray, angle_deg: float) -> np.ndarray:
@@ -425,19 +347,6 @@ def preprocess(img: np.ndarray) -> np.ndarray:
     return morph_close(binary, 2, 2)
 
 
-def preprocess_reference(img: np.ndarray) -> np.ndarray:
-    """The reference's LITERAL preprocessing chain (ocr_service.py:176-199):
-    grayscale → polarity → bilateral(9,75,75) → CLAHE(2.0, 8×8) →
-    threshold(128) → close(2×2). Kept as a variant, not the default: the
-    pinned prototypes were minted through ``preprocess`` (SURVEY §7 R2
-    excludes bilateral/CLAHE from the bit-exact contract), so this chain
-    classifies via the hamming/vote tiers where edges moved."""
-    gray = polarity_invert(to_grayscale(img))
-    den = bilateral_filter(gray)
-    enh = clahe(den)
-    return morph_close(threshold(enh, 128), 2, 2)
-
-
 def preprocess_noisy_pair(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Robustness variant: blur before threshold to kill salt-and-pepper.
     Returns (binary, gray): the preprocessed binary AND the geometry-aligned
@@ -510,124 +419,8 @@ def segment_regions(
 
 
 # ---------------------------------------------------------------------------
-# color-space conversions + color/shape region filters (fixture-extraction
-# legs of the reference: extract_from_reference.py:85-92,243-253,
-# preprocess_color_images.py — F19/P6/P7)
+# noisy-path segmentation: adjacent-region merge + connected components
 # ---------------------------------------------------------------------------
-
-
-def bgr_to_hsv(img: np.ndarray) -> np.ndarray:
-    """H×W×3 BGR uint8 -> H×W×3 HSV uint8 in cv2's 8-bit convention:
-    H in [0,180), S and V in [0,255]."""
-    b, g, r = (img[..., i].astype(np.float64) for i in range(3))
-    v = np.maximum(np.maximum(b, g), r)
-    mn = np.minimum(np.minimum(b, g), r)
-    delta = v - mn
-    s = np.where(v > 0, 255.0 * delta / np.where(v > 0, v, 1), 0.0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        d = np.where(delta > 0, delta, 1)
-        h = np.where(
-            v == r,
-            60.0 * (g - b) / d,
-            np.where(v == g, 120.0 + 60.0 * (b - r) / d, 240.0 + 60.0 * (r - g) / d),
-        )
-    h = np.where(delta == 0, 0.0, h)
-    h = np.where(h < 0, h + 360.0, h) / 2.0  # cv2 packs H into [0,180)
-    return np.stack(
-        [np.round(h), np.round(s), np.round(v)], axis=-1
-    ).astype(np.uint8)
-
-
-def bgr_to_lab(img: np.ndarray) -> np.ndarray:
-    """H×W×3 BGR uint8 -> H×W×3 CIE-Lab uint8 (cv2 8-bit packing: L*255/100,
-    a/b + 128), D65 white point — preprocess_color_images.py's Lab leg."""
-    rgb = img[..., 2::-1].astype(np.float64) / 255.0
-    rgb = np.where(rgb > 0.04045, ((rgb + 0.055) / 1.055) ** 2.4, rgb / 12.92)
-    m = np.array(
-        [
-            [0.412453, 0.357580, 0.180423],
-            [0.212671, 0.715160, 0.072169],
-            [0.019334, 0.119193, 0.950227],
-        ]
-    )
-    xyz = rgb @ m.T
-    xyz /= np.array([0.950456, 1.0, 1.088754])  # D65 normalization
-
-    def f(t):
-        return np.where(t > 0.008856, np.cbrt(t), 7.787 * t + 16.0 / 116.0)
-
-    fx, fy, fz = f(xyz[..., 0]), f(xyz[..., 1]), f(xyz[..., 2])
-    L = np.where(xyz[..., 1] > 0.008856, 116.0 * fy - 16.0, 903.3 * xyz[..., 1])
-    a = 500.0 * (fx - fy) + 128.0
-    b = 200.0 * (fy - fz) + 128.0
-    return np.clip(
-        np.stack([L * 255.0 / 100.0, a, b], axis=-1), 0, 255
-    ).astype(np.uint8)
-
-
-PURPLE_LOWER = (120, 20, 20)  # reference extract_from_reference.py:86-87
-PURPLE_UPPER = (180, 255, 255)
-
-
-def purple_ratio(img_bgr: np.ndarray) -> float:
-    """Fraction of pixels inside the reference's purple HSV window
-    (inRange([120,20,20],[180,255,255]) — extract_from_reference.py:85-90)."""
-    hsv = bgr_to_hsv(img_bgr)
-    lo = np.array(PURPLE_LOWER, dtype=np.uint8)
-    hi = np.array(PURPLE_UPPER, dtype=np.uint8)
-    mask = np.all((hsv >= lo) & (hsv <= hi), axis=-1)
-    return float(mask.mean()) if mask.size else 0.0
-
-
-def filter_purple_regions(
-    img_bgr: np.ndarray,
-    regions: list[tuple[int, int, int, int]],
-    min_ratio: float = 0.3,
-) -> list[tuple[int, int, int, int]]:
-    """Keep regions whose crop is >= ``min_ratio`` purple (the reference's
-    30% bubble acceptance, extract_from_reference.py:92)."""
-    return [
-        (x, y, w, h)
-        for (x, y, w, h) in regions
-        if purple_ratio(img_bgr[y : y + h, x : x + w]) > min_ratio
-    ]
-
-
-def region_circularity(binary_crop: np.ndarray) -> float:
-    """4*pi*area / perimeter^2 over the crop's ink mask. Area = ink pixel
-    count; perimeter = boundary pixel count (ink pixels with a background
-    4-neighbour) — the discrete stand-in for cv2.arcLength on the contour
-    (extract_from_reference.py:243). ~1.0 for a disc, →0 for line-like ink."""
-    ink = binary_crop > 0
-    area = int(ink.sum())
-    if area == 0:
-        return 0.0
-    padded = np.pad(ink, 1)
-    interior = (
-        padded[:-2, 1:-1] & padded[2:, 1:-1] & padded[1:-1, :-2] & padded[1:-1, 2:]
-    )
-    perimeter = int((ink & ~interior).sum())
-    if perimeter == 0:
-        return 0.0
-    return float(4.0 * np.pi * area / (perimeter**2))
-
-
-def filter_circular_regions(
-    binary: np.ndarray,
-    regions: list[tuple[int, int, int, int]],
-    min_circularity: float = 0.4,
-    aspect: tuple[float, float] = (0.7, 1.3),
-) -> list[tuple[int, int, int, int]]:
-    """The reference's bubble-shape gate (extract_from_reference.py:253):
-    keep regions that are round enough AND near-square."""
-    out = []
-    for (x, y, w, h) in regions:
-        ar = w / h if h > 0 else 0.0
-        if not (aspect[0] < ar < aspect[1]):
-            continue
-        if region_circularity(binary[y : y + h, x : x + w]) > min_circularity:
-            out.append((x, y, w, h))
-    return out
 
 
 def merge_adjacent_regions(
@@ -853,29 +646,6 @@ def classify_batch_cascade(
         vote_classify_crop(gray_crops[i]) if r[0] is None else r
         for i, r in enumerate(results)
     ]
-
-
-def recognize_word_vote(img: np.ndarray) -> str:
-    """Majority vote across three binarizations (fixed-128, Otsu, adaptive) —
-    the reference's per-bubble OCR vote (extract_from_reference.py:352-356).
-    Per character position, the most common recognized letter wins (first
-    occurrence breaks ties, as Counter.most_common does)."""
-    gray = polarity_invert(to_grayscale(img))
-    variants = [
-        morph_close(threshold(gray, 128), 2, 2),
-        morph_close(otsu_threshold(gray), 2, 2),
-        morph_close(adaptive_threshold(gray), 2, 2),
-    ]
-    words = []
-    for pre in variants:
-        regions = segment_regions(pre)
-        crops = [pre[y : y + h, x : x + w] for (x, y, w, h) in regions]
-        words.append(
-            "".join(r[0] for r in classify_batch(crops) if r[0] is not None)
-        )
-    from collections import Counter
-
-    return Counter(words).most_common(1)[0][0] if words else ""
 
 
 def recognize_word(img: np.ndarray, noisy: bool = False) -> list[dict]:

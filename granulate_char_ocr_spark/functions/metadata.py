@@ -345,70 +345,3 @@ def indexability_python(
         bool(re.search(_S404_MARK, body)) and len(body) < _S404_BODY_MAX
     )
     return {"noindex": noindex, "nofollow": nofollow, "soft404": soft404}
-
-
-# --- JSON-LD structured data ---------------------------------------------
-#
-# schema.org JSON-LD is the machine-readable page summary publishers
-# actually maintain (search engines consume it, so it is kept accurate
-# where visible HTML rots). The published-date ladder above already
-# trusts it first; these columns surface the other curation-relevant
-# fields. The FIRST ld+json block wins (the page's primary entity by
-# convention); JSON traversal is JVM-side get_json_object — a
-# non-string @type (array form) comes back as its compact JSON text,
-# documented rather than exploded.
-
-_LD_TYPE_PATH = "$['@type']"
-_LD_HEADLINE_PATH = "$.headline"
-_LD_AUTHOR_NAME_PATH = "$.author.name"
-_LD_AUTHOR_PATH = "$.author"
-
-
-def jsonld_cols(col: Column) -> list[Column]:
-    """(ld_type, ld_headline, ld_author) from the first
-    application/ld+json block; NULL when absent or malformed
-    (get_json_object returns NULL on bad JSON — never throws)."""
-    block = F.nullif(F.regexp_extract(col, _LD_SCRIPT, 1), F.lit(""))
-    author = F.coalesce(
-        F.get_json_object(block, _LD_AUTHOR_NAME_PATH),
-        F.get_json_object(block, _LD_AUTHOR_PATH),
-    )
-    return [
-        F.get_json_object(block, _LD_TYPE_PATH).alias("ld_type"),
-        F.get_json_object(block, _LD_HEADLINE_PATH).alias("ld_headline"),
-        author.alias("ld_author"),
-    ]
-
-
-def jsonld_python(html: str) -> dict[str, str | None]:
-    """Python twin (pinned on the test matrix; exotic JSON renderings
-    may differ from Jackson's compact form — the tests stay within the
-    common subset)."""
-    import json
-
-    m = re.search(_LD_SCRIPT, html)
-    out = {"ld_type": None, "ld_headline": None, "ld_author": None}
-    if not m or not m.group(1).strip():
-        return out
-    try:
-        doc = json.loads(m.group(1))
-    except ValueError:
-        return out
-    if not isinstance(doc, dict):
-        return out
-
-    def render(v):
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return v
-        return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-
-    out["ld_type"] = render(doc.get("@type"))
-    out["ld_headline"] = render(doc.get("headline"))
-    author = doc.get("author")
-    if isinstance(author, dict) and isinstance(author.get("name"), str):
-        out["ld_author"] = author["name"]
-    else:
-        out["ld_author"] = render(author)
-    return out

@@ -16,9 +16,9 @@ streams (codespacerange width, bfchar, bfrange in both destination
 forms), Tf switches the active map, and glyph-coded show strings map
 back to text — the route professionally-produced PDFs require; fonts
 without /ToUnicode keep the default decode. For
-1.5 files the /XRef stream is decoded (W-tuple entries, /Index runs,
-PNG row predictors via the shared png._unfilter) and /ObjStm streams
-are expanded, which also resolves indirect '/Length n 0 R' references
+1.5 files the /ObjStm streams are expanded (objects are found by a
+layout-agnostic walk, so the /XRef stream itself is not needed), which
+also resolves indirect '/Length n 0 R' references
 whose integer lives inside an object stream. Content streams themselves
 can never live inside an ObjStm (ISO 32000-1 §7.5.7 excludes stream
 objects), so text extraction still walks top-level streams. Encrypted
@@ -101,11 +101,6 @@ def _pdf_text(data: bytes) -> str:
     if data[:2] == b"\xfe\xff":
         return data[2:].decode("utf-16-be", errors="replace")
     return data.decode("latin-1")
-
-
-def _decode_pdf_string(raw: bytes) -> str:
-    """PDF literal-string body (between parens, escapes intact) -> text."""
-    return _pdf_text(_unescape_pdf_string(raw))
 
 
 def _hex_string_bytes(raw: bytes) -> bytes:
@@ -255,98 +250,6 @@ def _assemble_single(content: bytes, object_streams: bool) -> bytes:
     return bytes(out)
 
 
-def _tounicode_cmap(chars: list[str]) -> bytes:
-    """Characters (code = 1-based index) -> a spec-shaped ToUnicode
-    CMap: consecutive-codepoint runs as bfrange (start-code form),
-    singletons as bfchar — the mix subset-font generators emit."""
-    runs: list[tuple[int, int, int]] = []  # (lo_code, hi_code, start_cp)
-    for i, ch in enumerate(chars):
-        code, cp = i + 1, ord(ch)
-        if (
-            runs
-            and cp <= 0xFFFF
-            and runs[-1][1] == code - 1
-            and runs[-1][2] + (code - 1 - runs[-1][0]) == cp - 1
-            and (cp & 0xFF) != 0  # a range may not cross its last byte
-        ):
-            lo, _, start = runs[-1]
-            runs[-1] = (lo, code, start)
-        else:
-            runs.append((code, code, cp))
-
-    def u16(cp: int) -> bytes:
-        return chr(cp).encode("utf-16-be").hex().upper().encode()
-
-    bfchar = [
-        b"<%04X> <%s>" % (lo, u16(start))
-        for lo, hi, start in runs
-        if lo == hi
-    ]
-    bfrange = [
-        b"<%04X> <%04X> <%s>" % (lo, hi, u16(start))
-        for lo, hi, start in runs
-        if lo != hi
-    ]
-    parts = [
-        b"/CIDInit /ProcSet findresource begin",
-        b"12 dict begin",
-        b"begincmap",
-        b"/CMapName /Adobe-Identity-UCS def",
-        b"/CMapType 2 def",
-        b"1 begincodespacerange",
-        b"<0000> <FFFF>",
-        b"endcodespacerange",
-    ]
-    if bfchar:
-        parts += [b"%d beginbfchar" % len(bfchar), *bfchar, b"endbfchar"]
-    if bfrange:
-        parts += [b"%d beginbfrange" % len(bfrange), *bfrange, b"endbfrange"]
-    parts += [
-        b"endcmap",
-        b"CMap currentdict /CMap defineresource pop",
-        b"end end",
-    ]
-    return b"\n".join(parts)
-
-
-def encode_pdf_cid(lines: list[str]) -> bytes:
-    """Text lines -> a single-page PDF the way professional generators
-    write it: a subset-embedded Type0 (/Identity-H) font whose show
-    strings are 2-byte GLYPH CODES in hex strings, readable only
-    through the font's Flate-compressed /ToUnicode CMap (VERDICT r4
-    item 4). The writer twin of the _tounicode_fontmap reader."""
-    chars = sorted({c for line in lines for c in line})
-    code_of = {c: i + 1 for i, c in enumerate(chars)}
-    ops = [b"BT", b"/F1 12 Tf", b"72 720 Td"]
-    for i, line in enumerate(lines):
-        if i:
-            ops.append(b"0 -14 Td")
-        hexstr = b"".join(b"%04X" % code_of[c] for c in line)
-        ops.append(b"<" + hexstr + b"> Tj")
-    ops.append(b"ET")
-    content = zlib.compress(b"\n".join(ops))
-    cmap = zlib.compress(_tounicode_cmap(chars))
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
-        b"<< /Type /Font /Subtype /Type0 /BaseFont /AAAAAA+FakeSans "
-        b"/Encoding /Identity-H /DescendantFonts [6 0 R] "
-        b"/ToUnicode 7 0 R >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(content)
-        + content
-        + b"\nendstream",
-        b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /AAAAAA+FakeSans "
-        b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
-        b"/Supplement 0 >> >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(cmap)
-        + cmap
-        + b"\nendstream",
-    ]
-    return _assemble_classic(objs)
-
-
 def _fmt_num(v: float) -> bytes:
     """PDF numeric operand: integers bare, reals with trailing zeros
     trimmed (4-decimal precision is exact for layout coordinates)."""
@@ -372,100 +275,6 @@ def encode_pdf_runs(
         ops.append(_encode_pdf_string(s) + b" Tj")
     ops.append(b"ET")
     return _assemble_single(zlib.compress(b"\n".join(ops)), object_streams)
-
-
-def encode_pdf_pages(
-    pages: list[list[str] | str], object_streams: bool = False
-) -> bytes:
-    """Multi-page PDF: one /Page object + one Flate content stream per
-    page under a shared /Pages tree and font. Each element of ``pages``
-    is that page's line list (a bare string is one line). Single-page
-    input delegates to ``encode_pdf`` (byte-identical output). With
-    ``object_streams`` the structure objects and every content stream's
-    indirect /Length integer pack into a /ObjStm + XRef stream (PDF
-    1.5); content streams stay top-level (streams cannot live inside an
-    object stream, ISO 32000 §7.5.7)."""
-    norm = [[p] if isinstance(p, str) else list(p) for p in pages]
-    if not norm:
-        raise ValueError("encode_pdf_pages: no pages")
-    if len(norm) == 1:
-        return encode_pdf(norm[0], object_streams)
-    contents = [_content_stream(p) for p in norm]
-    n = len(norm)
-
-    if not object_streams:
-        # 1 catalog, 2 tree, 3 font; page i: dict 4+2i, stream 5+2i
-        kids = b" ".join(b"%d 0 R" % (4 + 2 * i) for i in range(n))
-        objs: list[bytes] = [
-            b"<< /Type /Catalog /Pages 2 0 R >>",
-            b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n,
-            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-        ]
-        for i, c in enumerate(contents):
-            objs.append(
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 3 0 R >> >> "
-                b"/Contents %d 0 R >>" % (5 + 2 * i)
-            )
-            objs.append(
-                b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(c)
-                + c
-                + b"\nendstream"
-            )
-        return _assemble_classic(objs)
-
-    # --- 1.5 layout: 1 catalog, 2 tree, 3 font, 4..3+n page dicts (all
-    # packed), 4+n..3+2n content streams (top-level), 4+2n..3+3n /Length
-    # integers (packed), 4+3n ObjStm, 5+3n XRef stream
-    kids = b" ".join(b"%d 0 R" % (4 + i) for i in range(n))
-    packed: list[bytes] = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-    ]
-    packed_nums: list[int] = [1, 2, 3]
-    for i, c in enumerate(contents):
-        packed.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> "
-            b"/Contents %d 0 R >>" % (4 + n + i)
-        )
-        packed_nums.append(4 + i)
-    for i, c in enumerate(contents):
-        packed.append(b"%d" % len(c))
-        packed_nums.append(4 + 2 * n + i)
-    objstm_num, xref_num = 4 + 3 * n, 5 + 3 * n
-    objstm = _objstm_body(packed, packed_nums)
-    out = bytearray(b"%PDF-1.5\n")
-    top_offsets: dict[int, int] = {}
-    for i, c in enumerate(contents):
-        num = 4 + n + i
-        top_offsets[num] = len(out)
-        out += (
-            b"%d 0 obj\n<< /Length %d 0 R /Filter /FlateDecode >>\n"
-            b"stream\n" % (num, 4 + 2 * n + i)
-            + c
-            + b"\nendstream\nendobj\n"
-        )
-    top_offsets[objstm_num] = len(out)
-    out += b"%d 0 obj\n" % objstm_num + objstm + b"\nendobj\n"
-    xref_off = len(out)
-    size = xref_num + 1
-    entries = [(0, 0, 0xFFFF)]
-    packed_index = {num: i for i, num in enumerate(packed_nums)}
-    for num in range(1, size - 1):
-        if num in packed_index:
-            entries.append((2, objstm_num, packed_index[num]))
-        else:
-            entries.append((1, top_offsets[num], 0))
-    entries.append((1, xref_off, 0))  # the xref stream itself
-    out += (
-        b"%d 0 obj\n" % xref_num
-        + _xref_stream_obj(entries, size)
-        + b"\nendobj\n"
-    )
-    out += b"startxref\n%d\n%%%%EOF\n" % xref_off
-    return bytes(out)
 
 
 # a dict immediately followed by the stream keyword: lazy body bound only
@@ -653,66 +462,6 @@ def _inflate(d: bytes, body: bytes) -> bytes:
     if re.search(rb"/Filter\b", d):
         raise ValueError("PDF: only FlateDecode streams supported")
     return body
-
-
-def _unpredict(raw: bytes, d: bytes) -> bytes:
-    """Undo the /DecodeParms PNG row predictor on a decoded stream (xref
-    streams near-universally use Predictor 12/Up). Reuses the PNG
-    scanline inverse filters (png._unfilter) with bpp=1."""
-    parms = re.search(rb"/DecodeParms\s*<<(.*?)>>", d, re.S)
-    if not parms:
-        return raw
-    pd = parms.group(1)
-    pred = _dict_int(pd, b"Predictor", 1)
-    if pred == 1:
-        return raw
-    if pred < 10:
-        raise ValueError(f"PDF: TIFF predictor {pred} unsupported")
-    from granulate_char_ocr_spark.functions.png import _unfilter
-
-    cols = _dict_int(pd, b"Columns", 1)
-    if len(raw) % (cols + 1):
-        raise ValueError("PDF: predictor data not a whole number of rows")
-    out = bytearray()
-    prev = np.zeros(cols, dtype=np.uint8)
-    for r in range(0, len(raw), cols + 1):
-        cur = np.frombuffer(raw[r + 1 : r + 1 + cols], dtype=np.uint8)
-        prev = _unfilter(raw[r], cur, prev, 1)
-        out += prev.tobytes()
-    return bytes(out)
-
-
-def parse_xref_stream(d: bytes, body: bytes) -> dict[int, tuple[int, int, int]]:
-    """Decode one /Type /XRef cross-reference stream: {objnum: (type,
-    field2, field3)} — type 1 = at offset field2, type 2 = object number
-    field2's ObjStm at index field3 (ISO 32000-1 §7.5.8)."""
-    w = re.search(rb"/W\s*\[([^\]]*)\]", d)
-    if not w:
-        raise ValueError("PDF: xref stream missing /W")
-    widths = [int(x) for x in w.group(1).split()]
-    idx = re.search(rb"/Index\s*\[([^\]]*)\]", d)
-    if idx:
-        index = [int(x) for x in idx.group(1).split()]
-    else:
-        index = [0, _dict_int(d, b"Size")]
-    raw = _unpredict(body, d)
-    rowlen = sum(widths)
-    entries: dict[int, tuple[int, int, int]] = {}
-    pos = 0
-    for start, count in zip(index[::2], index[1::2]):
-        for objnum in range(start, start + count):
-            if pos + rowlen > len(raw):
-                raise ValueError("PDF: truncated xref stream")
-            fields = []
-            for width in widths:
-                fields.append(
-                    int.from_bytes(raw[pos : pos + width], "big")
-                    if width
-                    else (1 if not fields else 0)  # defaults per spec
-                )
-                pos += width
-            entries[objnum] = tuple(fields)
-    return entries
 
 
 def expand_object_streams(data: bytes) -> dict[int, bytes]:
@@ -912,11 +661,6 @@ def _decode_pdf_streams(data: bytes) -> list[list[str]]:
     return per_stream
 
 
-def _text_stream_bodies(data: bytes) -> list[bytes]:
-    """All inflated BT-bearing content-stream bodies, document order."""
-    return _text_streams_and_fonts(data)[0]
-
-
 def _text_streams_and_fonts(
     data: bytes,
 ) -> tuple[list[bytes], dict[bytes, tuple]]:
@@ -1093,16 +837,6 @@ def _reading_order(runs: list[tuple[float, float, float, str]]) -> list[str]:
             g.sort(key=lambda r: r[0])
             lines.append("".join(r[3] for r in g))
     return lines
-
-
-def decode_pdf_runs(data: bytes) -> list[tuple[float, float, str]]:
-    """PDF bytes -> positioned text runs (x, y, text) in draw order,
-    all content streams flattened."""
-    runs: list[tuple[float, float, float, str]] = []
-    bodies, fontmap = _text_streams_and_fonts(data)
-    for body in bodies:
-        _extract_runs(body, runs, fontmap)
-    return [(x, y, t) for x, y, _, t in runs]
 
 
 def decode_pdf_layout_pages(data: bytes) -> list[str]:

@@ -27,6 +27,7 @@ import re
 import unicodedata
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -58,21 +59,26 @@ def normalize_python(s: str | None) -> str | None:
     return unicodedata.normalize("NFC", s.strip().upper())
 
 
-_nfc_cached = None
+_nfc_cached = (None, None)  # (SparkContext it was built under, UDF)
 
 
 def _nfc_udf():
-    """Lazily-built Arrow-batched NFC UDF (pandas_udf needs a live session)."""
+    """Lazily-built Arrow-batched NFC UDF (pandas_udf needs a live session).
+
+    Cached per SparkContext: the UDF's JVM side binds the accumulator of the
+    context that first ran it, so reusing it under a later session makes
+    every task log "Failed to update accumulator"."""
     global _nfc_cached
-    if _nfc_cached is None:
+    sc = SparkContext._active_spark_context
+    if _nfc_cached[0] is not sc:
 
         @pandas_udf("string")
         def nfc(s: pd.Series) -> pd.Series:
             # Arrow-batched; the only Python hop in the text path.
             return s.str.normalize("NFC")
 
-        _nfc_cached = nfc
-    return _nfc_cached
+        _nfc_cached = (sc, nfc)
+    return _nfc_cached[1]
 
 
 # ASCII is NFC-invariant (no ASCII string changes under NFC, and every

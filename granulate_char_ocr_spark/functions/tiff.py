@@ -216,40 +216,6 @@ def encode_tiff(
     )
 
 
-def encode_tiff_multipage(
-    pages: list[np.ndarray],
-    compression: int = _NONE,
-    rows_per_strip: int | None = None,
-    predictor: int = 1,
-    bilevel: bool = False,
-    t4_2d: bool = False,
-    fill_order: int = 1,
-    tile: int | None = None,
-) -> bytes:
-    """Multi-page TIFF (the fax/scanned-document convention: one IFD per
-    page chained by the next-IFD pointer). Page block sizes are
-    offset-independent, so a sizing pass fixes the chain offsets and a
-    second pass emits each block with absolute strip offsets (pages
-    encode twice — an accepted cost: writes are corpus-generation only,
-    decode is the hot path)."""
-    if not pages:
-        raise ValueError("encode_tiff_multipage: no pages")
-    opts = (compression, rows_per_strip, predictor, bilevel, t4_2d,
-            fill_order, tile)
-    sizes = [len(_encode_page(p, 8, 0, *opts)) for p in pages]
-    offs, off = [], 8
-    for s in sizes:
-        offs.append(off)
-        off += s
-    blocks = [
-        _encode_page(
-            p, offs[i], offs[i + 1] if i + 1 < len(pages) else 0, *opts
-        )
-        for i, p in enumerate(pages)
-    ]
-    return b"II*\x00" + struct.pack("<I", 8) + b"".join(blocks)
-
-
 def _encode_page(
     img: np.ndarray,
     ifd_off: int,

@@ -1,10 +1,8 @@
 """Corpus-curation operators an LLM training-data pipeline runs after the
 text-analysis pass: PII redaction, benchmark decontamination, training-
-sequence packing, TF-IDF keyword extraction, and boilerplate line dedup.
-All pure column expressions (whole-stage codegen, no UDF anywhere); the
-first four are graded at the gate with exact DuckDB oracles in
-driver_queries.py, the line dedup (the driver surface is capped at 50
-entries) is pinned against a DuckDB replica in tests/test_curation.py.
+sequence packing, TF-IDF keyword extraction, and the fused Gopher/C4
+quality filter. All pure column expressions (whole-stage codegen, no UDF
+anywhere), graded with exact DuckDB oracles in driver_queries.py.
 
 Regex dialect note (shared with textstats/html): every pattern stays in
 the common Java-regex / RE2 subset — character classes, bounded
@@ -187,66 +185,6 @@ def chunk_lines(docs: DataFrame, words_per_line: int = 8) -> DataFrame:
     )
 
 
-def dedup_boilerplate_lines(docs_lines: DataFrame, min_df: int = 2) -> DataFrame:
-    """(doc_id, n_lines, n_removed, clean_text): RefinedWeb/CCNet-style
-    line-level dedup — a line occurring in >= ``min_df`` DISTINCT documents
-    is boilerplate (nav menus, cookie banners, footers) and is removed from
-    every document, order of the surviving lines preserved. Input needs
-    (doc_id, lines array<string>); see chunk_lines.
-
-    Scale shape: per-doc-distinct explode -> line document-frequency (a
-    partial-aggregated groupBy whose output is vocabulary-of-lines-sized),
-    then posexplode + an explicitly broadcast hash join against the
-    (vocabulary-of-boilerplate-sized) set and one groupBy(doc_id) stitch
-    (sort_array over (pos, line) structs) to reassemble order — the same
-    re-assembly pattern as the OCR span stitch. No driver-side collect
-    anywhere."""
-    per_doc = docs_lines.select(
-        "doc_id", F.explode(F.array_distinct("lines")).alias("line")
-    )
-    boiler = (
-        per_doc.groupBy("line")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") >= min_df)
-        .select("line")
-    )
-    pos = docs_lines.select(
-        "doc_id",
-        F.size("lines").alias("n_lines"),
-        F.posexplode_outer("lines").alias("pos", "line"),
-    )
-    # marker left-join rather than anti-join: a fully-boilerplate document
-    # must still come out (n_removed == n_lines, empty text), and the
-    # posexplode_outer null row keeps empty-array docs alive too
-    marked = pos.join(
-        F.broadcast(boiler.withColumn("_b", F.lit(1))), "line", "left"
-    )
-    keep_row = F.col("_b").isNull() & F.col("line").isNotNull()
-    return (
-        marked.groupBy("doc_id", "n_lines")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(keep_row, F.struct("pos", "line"))
-                        )
-                    ),
-                    lambda s: s.line,
-                ),
-                " ",
-            ).alias("clean_text"),
-            F.count(F.when(keep_row, 1)).alias("_n_kept"),
-        )
-        .select(
-            "doc_id",
-            "n_lines",
-            (F.col("n_lines") - F.col("_n_kept")).alias("n_removed"),
-            "clean_text",
-        )
-    )
-
-
 def gopher_line_cols() -> dict:
     """name -> Column of the two line-level Gopher signals over a
     ``lines`` column (shared with quality_filter)."""
@@ -321,8 +259,8 @@ def c4_line_filter(
     (code); a document passes when >= ``min_kept_lines`` lines survive
     and neither flag fires. Input needs (doc_id, lines array<string>);
     see chunk_lines. Pure per-row HOF projection — no shuffle, no UDF.
-    (The original's bad-words list and 3-sentence-span dedup legs live in
-    dedup_boilerplate_lines / dedup.duplicated_passage_stats.)"""
+    (The original's 3-sentence-span dedup leg lives in
+    dedup.duplicated_passage_stats.)"""
     out = docs_lines.select(
         "doc_id",
         F.size("lines").alias("n_lines"),
@@ -343,7 +281,9 @@ def quality_filter(
     shuffle, no UDF (the naive compose of the three operators would
     re-scan and shuffle-join the corpus twice). Output: doc_id, the five
     gopher_doc_cols + gopher_pass, the three gopher_line_cols +
-    line_pass, the four c4_cols + c4_pass."""
+    line_pass, the four c4_cols + c4_pass. tests/test_filters.py pins it
+    row-for-row against the separate reference operators
+    textstats.gopher_quality_flags, gopher_line_flags and c4_line_filter."""
     from granulate_char_ocr_spark.operators.textstats import (
         gopher_doc_cols,
         gopher_pass_col,

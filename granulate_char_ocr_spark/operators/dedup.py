@@ -987,62 +987,3 @@ def duplicated_passage_stats(docs: DataFrame, n: int = 20) -> DataFrame:
             6,
         ).alias("dup_fraction"),
     )
-
-
-def remove_duplicated_passages(docs: DataFrame, n: int = 20) -> DataFrame:
-    """(doc_id, text, n_tokens, n_removed): the removal half of ExactSubstr
-    dedup (Lee et al. 2021 "Deduplicating Training Data Makes Language
-    Models Better") over the same fixed n-token windows as
-    :func:`duplicated_passage_stats`. Every occurrence of a window that
-    appears more than once in the corpus is removed EXCEPT the globally
-    first occurrence, ordered by (doc_id, pos) — one copy of each
-    duplicated passage survives, exactly like the suffix-array original
-    keeps one copy of each duplicated byte range. Tokens covered by at
-    least one removable window are dropped and the survivors re-joined on
-    single spaces; untouched documents pass through verbatim.
-
-    Scale shape: one window explosion, one gram-keyed partial aggregate
-    for the global first occurrence (min over a (doc_id, pos) struct —
-    no per-gram window function, so no per-gram sort), one gram-keyed
-    join back, then a per-doc collect of removable starts re-joined to
-    the corpus. The in-row rebuild is exists() over the starts array per
-    token — O(tokens x removable windows) per doc, which is bounded by
-    the doc itself; heavily duplicated docs are exactly the ones that end
-    up short."""
-    win = _gram_windows_expr(n, with_pos=True, distinct=False)
-    grams = (
-        docs.withColumn("_toks", TOKENS())
-        .select("doc_id", F.explode(F.expr(win)).alias("w"))
-        .select("doc_id", F.col("w.pos").alias("pos"), F.col("w.g").alias("g"))
-    )
-    first = grams.groupBy("g").agg(
-        F.min(F.struct("doc_id", "pos")).alias("keep"),
-        F.count("*").alias("occ"),
-    )
-    starts = (
-        grams.join(first, "g")
-        .where(
-            (F.col("occ") > 1)
-            & (F.struct("doc_id", "pos") != F.col("keep"))
-        )
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("_starts"))
-    )
-    removed = f"exists(_starts, p -> p <= i and i < p + {n})"
-    return (
-        docs.join(starts, "doc_id", "left")
-        .withColumn("_toks", TOKENS())
-        .withColumn(
-            "_starts",
-            F.coalesce("_starts", F.expr("cast(array() as array<int>)")),
-        )
-        .withColumn(
-            "_kept", F.expr(f"filter(_toks, (t, i) -> not {removed})")
-        )
-        .select(
-            "doc_id",
-            F.array_join("_kept", " ").alias("text"),
-            F.size("_toks").alias("n_tokens"),
-            (F.size("_toks") - F.size("_kept")).alias("n_removed"),
-        )
-    )

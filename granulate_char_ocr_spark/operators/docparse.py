@@ -55,25 +55,6 @@ def page_metadata(
     return df.select(key_col, *page_metadata_cols(F.col(html_col)))
 
 
-def page_indexability(
-    df: DataFrame,
-    html_col: str = "html",
-    headers_col: str | None = None,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """(key, html[, headers]) -> (key, noindex, nofollow, soft404): the
-    keep/drop signals an ingest pipeline checks before a fetched page
-    enters the corpus — robots META directives, X-Robots-Tag response
-    headers, and soft-404 (error page served as HTTP 200) detection
-    (functions/metadata.py). Pure codegen, zero exchanges."""
-    from granulate_char_ocr_spark.functions.metadata import (
-        indexability_cols,
-    )
-
-    h = F.col(headers_col) if headers_col else None
-    return df.select(key_col, *indexability_cols(F.col(html_col), h))
-
-
 def html_tables(
     df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
 ) -> DataFrame:
@@ -264,49 +245,6 @@ def decode_bodies(
     return df.select(key_col, payload_col, ct_col).mapInPandas(
         fn, schema=f"{key_col} {key_type}, text string"
     )
-
-
-def pdf_pages(
-    df: DataFrame, payload_col: str = "payload", key_col: str = "doc_id"
-) -> DataFrame:
-    """1→N page explode: (key, pdf_bytes) -> (key, page_no, page_text),
-    one row per text content stream in document order (page boundaries
-    for one-stream-per-page files — this module's writer and the
-    dominant real-world layout). The joined page texts equal
-    ``pdf_texts``'s output exactly."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from granulate_char_ocr_spark.functions.pdf import (
-            decode_pdf_text_pages,
-        )
-
-        for pdf in batches:
-            keys, nos, texts = [], [], []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                for i, t in enumerate(decode_pdf_text_pages(bytes(p))):
-                    keys.append(k)
-                    nos.append(i)
-                    texts.append(t)
-            yield pd.DataFrame(
-                {key_col: keys, "page_no": nos, "page_text": texts}
-            )
-
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.select(key_col, payload_col).mapInPandas(
-        fn, schema=f"{key_col} {key_type}, page_no int, page_text string"
-    )
-
-
-def jsonld_metadata(
-    df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, html) -> (key, ld_type, ld_headline, ld_author): the
-    schema.org JSON-LD fields of the page's first ld+json block
-    (functions/metadata.jsonld_cols) — JVM-side get_json_object, NULL
-    on absent/malformed JSON, zero exchanges."""
-    from granulate_char_ocr_spark.functions.metadata import jsonld_cols
-
-    return df.select(key_col, *jsonld_cols(F.col(html_col)))
 
 
 def docx_texts(

@@ -50,8 +50,7 @@ from granulate_char_ocr_spark.operators.urlfilter import (
 # only (the deterministic page synth and WARC-extracted markup both
 # quote); single-quote support would be a second alternation, excluded
 # to keep the Java/RE2 parity surface minimal. Case-insensitive so
-# <A HREF=...> markup feeds the edge table exactly like the anchor
-# table (_RE_ANCHOR) — the two graph surfaces must not diverge.
+# <A HREF=...> markup feeds the edge table too.
 _RE_HREF = r'(?i)<a\s[^>]*href="([^"]+)"'
 
 
@@ -89,67 +88,6 @@ def link_edges(
         .filter((F.col("dst_host") != "") & (F.col("dst_host") != F.col("src_host")))
         .groupBy("src_host", "dst_host")
         .agg(F.count("*").alias("n_links"))
-    )
-
-
-# whole <a> elements: group 1 = href value, group 2 = inner markup.
-# Same double-quote convention as _RE_HREF; (?s) lets anchors span
-# lines, and the lazy body stops at the first </a> (nested <a> is
-# illegal HTML that browsers auto-close the same way).
-_RE_ANCHOR = r'(?is)<a\s[^>]*href="([^"]+)"[^>]*>(.*?)</a>'
-
-
-def anchor_texts(
-    pages: DataFrame,
-    src_host_col: str = "src_host",
-    html_col: str = "html",
-) -> DataFrame:
-    """(src_host, dst_url, dst_host, anchor): the anchor-text table —
-    what each page SAYS about the pages it links to. Anchor text is a
-    classic relevance/training signal (it describes the TARGET, not
-    the source); a corpus pipeline aggregates it per dst_url.
-
-    Pure codegen: the two capture groups are pulled with two
-    regexp_extract_all passes over the page, zip_with pairs them
-    positionally (both passes walk the same matches of the same
-    pattern, so the arrays are index-aligned by construction), then
-    per anchor the inner markup is tag-stripped, entity-decoded and
-    whitespace-collapsed — the main-text cleanup, scoped to the
-    element. Relative hrefs (no authority after canonicalization) and
-    empty anchors (image links, spacer anchors) are dropped. One scan
-    -> explode, zero joins, zero UDFs."""
-    from granulate_char_ocr_spark.functions.html import (
-        _WS_CLASS,
-        decode_entities_expr,
-    )
-
-    html = F.col(html_col)
-    pairs = F.zip_with(
-        F.regexp_extract_all(html, F.lit(_RE_ANCHOR), F.lit(1)),
-        F.regexp_extract_all(html, F.lit(_RE_ANCHOR), F.lit(2)),
-        lambda h, t: F.struct(h.alias("href"), t.alias("txt")),
-    )
-    df = pages.select(
-        F.col(src_host_col).alias("src_host"), F.explode(pairs).alias("_a")
-    )
-    url = canonical_url_expr(F.col("_a.href"))
-    anchor = F.trim(
-        F.regexp_replace(
-            decode_entities_expr(
-                F.regexp_replace(F.col("_a.txt"), r"<[^>]+>", " ")
-            ),
-            _WS_CLASS,
-            " ",
-        )
-    )
-    return (
-        df.select(
-            "src_host",
-            url.alias("dst_url"),
-            host_of(url).alias("dst_host"),
-            anchor.alias("anchor"),
-        )
-        .filter((F.col("dst_host") != "") & (F.col("anchor") != ""))
     )
 
 
@@ -269,86 +207,3 @@ def pagerank(
             ).alias("_rank")
         ).localCheckpoint(eager=True)
     return ranks.select(F.col("_node").alias("host"), F.col("_rank").alias("rank"))
-
-
-# --- registrable domains and the nepotistic-link signal -----------------
-
-# second-level labels under which registrations happen one level deeper
-# (the high-frequency core of the Public Suffix List's country sections:
-# 'example.co.uk' registers under 'co.uk', so its registrable domain is
-# 'example.co.uk', not 'co.uk'). The FULL PSL is thousands of entries
-# and changes monthly — shipping it would pin stale data; this embedded
-# core covers the dominant patterns and is the documented approximation
-# (production swaps in a broadcast PSL table, same expression shape).
-_SLD_CORE = (
-    "co,com,org,net,ac,gov,edu,mil,sch,or,ne,go"
-)
-
-
-def registrable_domain_expr(host: Column) -> Column:
-    """host -> registrable domain (eTLD+1, PSL-core approximation):
-    the last two labels, or the last three when the middle label is a
-    known second-level registry label under a 2-letter ccTLD
-    ('example.co.uk' -> 'example.co.uk', 'a.b.example.org' ->
-    'example.org'). IP literals pass through whole; a NULL host stays
-    NULL (concat_ws would otherwise fold it to '' and alias every
-    missing host into one spurious domain — review finding r4).
-    Pure codegen."""
-    parts = F.split(F.lower(host), r"\.")
-    n = F.size(parts)
-    # IPv4 literal: every label numeric — grouping by a /16 would be
-    # wrong; treat the address as its own domain
-    is_ip = F.lower(host).rlike(r"^[0-9.]+$")
-    null_host = host.isNull()
-    tld = F.element_at(parts, -1)
-    sld = F.when(n >= 2, F.element_at(parts, -2)).otherwise(F.lit(""))
-    deep = (
-        (n >= 3)
-        & (F.length(tld) == 2)
-        & F.array_contains(
-            F.split(F.lit(_SLD_CORE), ","), sld
-        )
-    )
-    last2 = F.concat_ws(".", F.slice(parts, -2, 2))
-    last3 = F.concat_ws(".", F.slice(parts, -3, 3))
-    return (
-        F.when(null_host, F.lit(None).cast("string"))
-        .when(is_ip | (n <= 2), F.lower(host))
-        .when(deep, last3)
-        .otherwise(last2)
-    )
-
-
-def domain_link_stats(edges: DataFrame) -> DataFrame:
-    """host-level edge table (src_host, dst_host, n_links) ->
-    (src_domain, n_links, n_intra, intra_ratio): how much of a
-    domain's outlinking stays inside its own registrable domain — the
-    classic nepotistic-link spam signal (link farms self-link heavily;
-    editorial sites don't). One hash aggregate over the edge table; the
-    domain map is a projection, so the plan is agg-over-map at any
-    scale."""
-    src_d = registrable_domain_expr(F.col("src_host"))
-    dst_d = registrable_domain_expr(F.col("dst_host"))
-    intra = F.when(src_d == dst_d, F.col("n_links")).otherwise(F.lit(0))
-    return (
-        edges.select(
-            src_d.alias("src_domain"),
-            F.col("n_links"),
-            intra.alias("_intra"),
-        )
-        .groupBy("src_domain")
-        .agg(
-            F.sum("n_links").alias("n_links"),
-            F.sum("_intra").alias("n_intra"),
-        )
-        .select(
-            "src_domain",
-            "n_links",
-            "n_intra",
-            # try_divide: ANSI mode (default-on, CLAUDE.md) throws on
-            # /0 — a zero-weight edge group yields NULL ratio instead
-            F.round(F.try_divide("n_intra", "n_links"), 6).alias(
-                "intra_ratio"
-            ),
-        )
-    )

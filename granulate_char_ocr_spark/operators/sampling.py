@@ -30,13 +30,6 @@ def _bucket(key: Column) -> Column:
     return _draw32(key) % 100
 
 
-def hash_sample(df: DataFrame, key_col: str, pct: int) -> DataFrame:
-    """Keep ~pct% of rows, decided by key hash (deterministic, join-stable:
-    two tables sampled on the same key keep the SAME keys, so sampled fact
-    and dimension stay joinable — a per-row RNG cannot promise that)."""
-    return df.filter(_bucket(F.col(key_col)) < pct)
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,

@@ -664,72 +664,3 @@ def charlm_perplexity(docs: DataFrame, ref: DataFrame | None = None) -> DataFram
         F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
         "perplexity",
     )
-
-
-def perplexity_buckets(
-    docs: DataFrame, ref: DataFrame | None = None, by: str = "lang"
-) -> DataFrame:
-    """(doc_id, <by>, perplexity, bucket): CCNet's head/middle/tail split —
-    perplexity terciles within each ``by`` group (per-language in CCNet),
-    'head' being the cleanest third. Deterministic tie-break on doc_id;
-    unscorable docs (NULL perplexity) sort last. Note ntile splits by ROW
-    COUNT, not value: NULLs land in 'tail' only while they are fewer than
-    a third of their group (true of any real corpus; in a 3-doc group with
-    2 unscorable docs, one of them would be bucketed 'middle')."""
-    from pyspark.sql import Window
-
-    scored = charlm_perplexity(docs, ref).join(
-        docs.select("doc_id", by), "doc_id"
-    )
-    t = F.ntile(3).over(
-        Window.partitionBy(by).orderBy(
-            F.col("perplexity").asc_nulls_last(), "doc_id"
-        )
-    )
-    return scored.select(
-        "doc_id",
-        by,
-        "perplexity",
-        F.element_at(
-            F.array(F.lit("head"), F.lit("middle"), F.lit("tail")), t
-        ).alias("bucket"),
-    )
-
-
-# --- sentence segmentation ------------------------------------------------
-
-# sentence-final punctuation, optional closing quote/bracket, then
-# whitespace before an upper-case/quote/digit opener. Java regex only
-# (fixed-width lookbehind; RE2/DuckDB has no lookbehind, so this leg is
-# pytest-pinned against the Python twin rather than SQL-oracled).
-# Documented naive-splitter limits, the standard ones: abbreviations
-# ("Dr. Smith"), decimal points inside numbers are safe (no following
-# whitespace+capital), ellipses split at the final dot.
-SENTENCE_SPLIT_RE = r"(?<=[.!?][\")”’])\s+(?=[A-Z0-9\"“])" \
-    r"|(?<=[.!?])\s+(?=[A-Z0-9\"“])"
-
-
-def explode_sentences(
-    docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, text) -> (key, sent_idx, sentence): 1→N rule-based
-    sentence segmentation — the unit of sentence-level dedup,
-    decontamination and packing. Pure codegen split + posexplode;
-    empty pieces dropped; the split keeps all characters (boundaries
-    consume only the whitespace run)."""
-    pieces = F.split(F.col(text_col), SENTENCE_SPLIT_RE)
-    return (
-        docs.select(
-            key_col,
-            F.posexplode(pieces).alias("sent_idx", "sentence"),
-        )
-        .filter(F.trim(F.col("sentence")) != "")
-    )
-
-
-def split_sentences_python(text: str) -> list[str]:
-    """Python twin of explode_sentences' split (same pattern; Python
-    re and Java regex agree on fixed-width lookbehind/lookahead)."""
-    import re as _re
-
-    return [p for p in _re.split(SENTENCE_SPLIT_RE, text) if p.strip()]

@@ -1,27 +1,16 @@
-"""Character validation + correction suggestion (SURVEY §2.2 P5).
+"""The Granulate↔Latin alphabet as a table (SURVEY §2.2 P5, §2.3 J2).
 
-Re-expresses the reference's ``CharacterValidator``
-(``backend/application/services/character_validator.py:23-53``) as pure
-column expressions over a broadcast of the 36-row alphabet table:
-
-  valid ⇔ symbol is a known Granulate symbol
-        ∧ confidence >= min_confidence
-        ∧ the claimed latin equals the mapping's latin
-
-``suggest_corrections`` mirrors ``CorrectionSuggestion`` (:62-71): for
-mapping-inconsistent rows, propose the mapping's latin with a confidence
-penalty.
+The reference's ``CharacterValidator``
+(``backend/application/services/character_validator.py:23-53``) checks
+recognized symbols against this 36-row mapping; the engine uses it as the
+broadcast side of the ``alphabet_translate_initials`` lookup query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.alphabet import GRANULATE_TO_LATIN
-
-MIN_CONFIDENCE = 0.5
-CORRECTION_PENALTY = 0.2
 
 
 def alphabet_table(spark: SparkSession) -> DataFrame:
@@ -29,37 +18,4 @@ def alphabet_table(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
         list(GRANULATE_TO_LATIN.items()),
         "granulate_symbol string, mapped_latin string",
-    )
-
-
-def validate_characters(
-    chars: DataFrame, min_confidence: float = MIN_CONFIDENCE
-) -> DataFrame:
-    """chars(granulate_symbol, latin, confidence) → + (is_valid, error).
-
-    Error precedence mirrors the reference: unknown symbol → low confidence
-    → mapping mismatch."""
-    spark = chars.sparkSession
-    mapping = F.broadcast(alphabet_table(spark))
-    joined = chars.join(mapping, "granulate_symbol", "left")
-    error = (
-        F.when(F.col("mapped_latin").isNull(), F.lit("unknown_symbol"))
-        .when(F.col("confidence") < min_confidence, F.lit("low_confidence"))
-        .when(F.col("latin") != F.col("mapped_latin"), F.lit("mapping_mismatch"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return joined.withColumn("error", error).withColumn(
-        "is_valid", F.col("error").isNull()
-    )
-
-
-def suggest_corrections(validated: DataFrame) -> DataFrame:
-    """Mapping-inconsistent rows → (suggested_latin, adjusted_confidence)."""
-    return validated.filter(F.col("error") == "mapping_mismatch").select(
-        "granulate_symbol",
-        "latin",
-        F.col("mapped_latin").alias("suggested_latin"),
-        F.greatest(
-            F.col("confidence") - F.lit(CORRECTION_PENALTY), F.lit(0.0)
-        ).alias("adjusted_confidence"),
     )

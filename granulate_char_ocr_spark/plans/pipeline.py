@@ -81,7 +81,6 @@ def extract_flat(
     docs: DataFrame,
     media: DataFrame,
     n_salts: int = 8,
-    num_partitions: int | None = None,
     noisy: bool = False,
     broadcast_media: bool = True,
     dedup_media: bool = True,
@@ -136,7 +135,7 @@ def extract_flat(
     if dedup_media:
         # classify each distinct image once; join tiny results back
         # (kernel-stage partition policy lives in unique_media_repartitioned)
-        uniq = unique_media_repartitioned(media_spans, media_side, num_partitions)
+        uniq = unique_media_repartitioned(media_spans, media_side)
         rec_uniq = extract_unique_media(
             uniq, noisy=noisy, detail=detail, segmenter=segmenter
         )
@@ -147,9 +146,7 @@ def extract_flat(
         # Order matters at scale: repartition the TINY span keys first, then
         # attach pixels via the (broadcast) media join inside each partition —
         # pixel bytes never enter the salt exchange.
-        salted = salt_repartition(
-            media_spans, n_salts=n_salts, num_partitions=num_partitions
-        )
+        salted = salt_repartition(media_spans, n_salts=n_salts)
         joined = salted.join(media_side, "media_ref", "left")
         recognized = extract_media_spans(
             joined, noisy=noisy, detail=detail, segmenter=segmenter
@@ -173,41 +170,23 @@ def extract_documents(
     docs: DataFrame,
     media: DataFrame,
     n_salts: int = 8,
-    num_partitions: int | None = None,
     noisy: bool = False,
     broadcast_media: bool = True,
     dedup_media: bool = True,
-    keep_empty_docs: bool = False,
     segmenter: str = "projection",
 ) -> DataFrame:
     """The headline job: documents + glyph_media → (doc_id, spans[order]).
-
-    ``keep_empty_docs``: documents whose spans array is empty vanish under
-    explode; when input/output doc-count parity matters (corpus accounting at
-    scale), this re-attaches them with an empty spans array at the cost of
-    one extra doc_id join."""
+    Documents whose spans array is empty vanish under the explode."""
     flat = extract_flat(
         docs,
         media,
         n_salts=n_salts,
-        num_partitions=num_partitions,
         noisy=noisy,
         broadcast_media=broadcast_media,
         dedup_media=dedup_media,
         detail=False,  # the stitch reads only (offset, kind, text, media_ref)
         segmenter=segmenter,
     )
-    assembled = assemble_documents(
+    return assemble_documents(
         flat.select("doc_id", "offset", "kind", "text", "media_ref")
-    )
-    if not keep_empty_docs:
-        return assembled
-    empty = F.expr(
-        "cast(array() as array<struct<kind:string,text:string,"
-        "media_ref:string,`order`:int>>)"
-    )
-    return (
-        docs.select("doc_id")
-        .join(assembled, "doc_id", "left")
-        .withColumn("spans", F.coalesce("spans", empty))
     )

@@ -175,112 +175,3 @@ def test_ima_adpcm_fact_and_partial_blocks():
 
     with _pytest.raises(ValueError, match="truncated"):
         _ima_decode(full[:1026], 1024)  # mid-header tail
-
-
-# --- energy-VAD segmentation ------------------------------------------------
-
-
-def test_activity_segments_tone_between_silences():
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.audio import activity_segments
-
-    sr = 8000
-    t = np.arange(int(0.5 * sr))
-    x = np.concatenate(
-        [
-            np.zeros(int(0.3 * sr)),
-            np.sin(2 * np.pi * 440 * t / sr) * 10000,
-            np.zeros(int(0.4 * sr)),
-        ]
-    )
-    segs = activity_segments(x, sr)
-    assert [a for _, _, a in segs] == [False, True, False]
-    assert abs(segs[1][0] - 0.3) < 0.05 and abs(segs[1][1] - 0.8) < 0.05
-
-
-def test_activity_segments_click_suppressed_and_silence():
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.audio import activity_segments
-
-    sr = 8000
-    # a 5 ms click inside silence must not open a segment (hangover)
-    click = np.concatenate(
-        [np.zeros(sr), np.ones(40) * 9000, np.zeros(sr)]
-    )
-    assert all(not a for _, _, a in activity_segments(click, sr))
-    # pure silence: one inactive segment; empty clip: none
-    assert [a for _, _, a in activity_segments(np.zeros(sr), sr)] == [False]
-    assert activity_segments(np.zeros(0), sr) == []
-
-
-def test_audio_segments_operator_wav_and_raw(spark):
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.wav import encode_wav
-    from granulate_char_ocr_spark.operators import multimodal
-
-    sr = 8000
-    t = np.arange(int(0.4 * sr))
-    voiced = (np.sin(2 * np.pi * 330 * t / sr) * 9000).astype(np.int16)
-    pcm = np.concatenate(
-        [np.zeros(int(0.3 * sr), np.int16), voiced]
-    )
-    wav = encode_wav(pcm, sr)
-    df = spark.createDataFrame(
-        [
-            ("w", "audio", "auto", 0, 0, 0, 0, bytearray(wav)),
-            ("r", "audio", "raw", 0, 0, 0, sr, pcm.tobytes()),
-        ],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    rows = multimodal.audio_segments(df).collect()
-    by_ref = {}
-    for r in rows:
-        by_ref.setdefault(r.media_ref, []).append(r)
-    for ref in ("w", "r"):
-        segs = sorted(by_ref[ref], key=lambda r: r.seg_index)
-        assert [s.active for s in segs] == [False, True]
-        assert abs(segs[1].start_sec - 0.3) < 0.05
-
-
-def test_activity_segments_partition_whole_clip():
-    # segments are disjoint and sum to the clip duration (review r4:
-    # the tail beyond the last full frame was previously uncovered)
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.audio import activity_segments
-
-    sr = 8000
-    t = np.arange(int(0.5 * sr))
-    x = np.concatenate(
-        [
-            np.zeros(int(0.3 * sr)),
-            np.sin(2 * np.pi * 440 * t / sr) * 10000,
-            np.zeros(1000),  # odd tail, not a whole frame
-        ]
-    )
-    segs = activity_segments(x, sr)
-    total = sum(e - s for s, e, _ in segs)
-    assert abs(total - len(x) / sr) < 1e-9
-    for (s1, e1, _), (s2, e2, _) in zip(segs, segs[1:]):
-        assert abs(e1 - s2) < 1e-9  # disjoint, gapless
-
-
-def test_activity_segments_linear_on_pathological_noise():
-    # near-threshold alternating noise must smooth in linear time
-    # (review r4: the flip-and-rescan loop was quadratic)
-    import time
-
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.audio import activity_segments
-
-    sr = 16000
-    rng = np.random.RandomState(3)
-    x = rng.randn(sr * 60) * 3000  # 1 minute of noise
-    t0 = time.perf_counter()
-    segs = activity_segments(x, sr)
-    assert time.perf_counter() - t0 < 5.0
-    assert sum(e - s for s, e, _ in segs) == len(x) / sr

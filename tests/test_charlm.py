@@ -1,12 +1,7 @@
-"""CCNet-style char-trigram LM perplexity scoring + head/middle/tail
-buckets (operators/textstats.py) — semantics and exact DuckDB parity."""
+"""CCNet-style char-trigram LM perplexity scoring (operators/textstats.py)
+— semantics and exact DuckDB parity."""
 
-from pyspark.sql import functions as F
-
-from granulate_char_ocr_spark.operators.textstats import (
-    charlm_perplexity,
-    perplexity_buckets,
-)
+from granulate_char_ocr_spark.operators.textstats import charlm_perplexity
 
 
 def test_charlm_perplexity_semantics(spark):
@@ -91,69 +86,3 @@ def test_charlm_perplexity_duckdb_parity(spark):
     }
     assert got == want
     assert all(v[0] > 0 for v in got.values())
-
-
-def test_perplexity_buckets_duckdb_parity(spark):
-    import duckdb
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    got = {
-        r["doc_id"]: (r["lang"], r["perplexity"], r["bucket"])
-        for r in perplexity_buckets(docs).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.execute(
-            """
-        WITH t AS (SELECT doc_id,
-                     regexp_replace(lower(text), '[^a-z ]', '', 'g') AS norm
-                   FROM documents),
-        g AS (SELECT doc_id,
-                unnest(CASE WHEN len(norm) >= 3 THEN
-                  list_transform(range(1, len(norm) - 1),
-                                 i -> substr(norm, i, 3))
-                  ELSE [] END) AS tri
-              FROM t),
-        c3 AS (SELECT tri, count(*) AS c3 FROM g GROUP BY 1),
-        c2 AS (SELECT substr(tri, 1, 2) AS ctx, sum(c3) AS c2
-               FROM c3 GROUP BY 1),
-        s AS (SELECT g.doc_id,
-                round(exp(-avg(ln(
-                  (coalesce(c3.c3, 0) + 1) / (coalesce(c2.c2, 0) + 27)
-                ))), 4) AS perplexity
-              FROM g LEFT JOIN c3 USING (tri)
-                     LEFT JOIN c2 ON substr(g.tri, 1, 2) = c2.ctx
-              GROUP BY 1)
-        SELECT d.doc_id, d.lang, s.perplexity,
-               (['head', 'middle', 'tail'])[
-                 ntile(3) OVER (PARTITION BY d.lang
-                                ORDER BY s.perplexity, d.doc_id)]
-        FROM documents d LEFT JOIN s USING (doc_id)
-        """
-        ).fetchall()
-    }
-    assert got == want
-    # every language splits into all three buckets
-    langs = {v[0] for v in got.values()}
-    for lg in langs:
-        assert {v[2] for v in got.values() if v[0] == lg} == {
-            "head", "middle", "tail"
-        }
-
-
-def test_perplexity_head_is_cleanest(spark):
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    out = perplexity_buckets(docs)
-    agg = {
-        r["bucket"]: r["p"]
-        for r in out.groupBy("bucket")
-        .agg(F.avg("perplexity").alias("p"))
-        .collect()
-    }
-    assert agg["head"] < agg["middle"] < agg["tail"]

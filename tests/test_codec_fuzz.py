@@ -18,6 +18,12 @@ import time
 
 import numpy as np
 import pytest
+from encoders import (
+    encode_gif_frames,
+    encode_jpeg_progressive,
+    encode_pdf_pages,
+    encode_tiff_multipage,
+)
 
 from granulate_char_ocr_spark.functions import bmp, gif, jpeg, png, tiff
 from granulate_char_ocr_spark.operators.multimodal import decode_payload
@@ -45,7 +51,7 @@ def _encoders() -> list[tuple[str, bytes]]:
         ("gif", gif.encode_gif(img, _palette())),
         ("bmp", bmp.encode_bmp(img)),
         ("jpeg", jpeg.encode_jpeg(img)),
-        ("jpeg_prog", jpeg.encode_jpeg_progressive(img)),
+        ("jpeg_prog", encode_jpeg_progressive(img)),
         ("tiff_none", tiff.encode_tiff(img, compression=1)),
         ("tiff_packbits", tiff.encode_tiff(img, compression=32773)),
         ("tiff_lzw", tiff.encode_tiff(img, compression=5)),
@@ -106,7 +112,7 @@ def _container_cases():
     frame = np.full((32, 48), 200, np.uint8)
     return [
         ("tiff_multipage",
-         tiff.encode_tiff_multipage([frame, frame // 2], compression=5),
+         encode_tiff_multipage([frame, frame // 2], compression=5),
          tiff.decode_tiff_pages),
         ("wav", wav.encode_wav(pcm, 16000), wav.decode_wav),
         ("wav_ulaw", wav.encode_wav(pcm, 8000, codec="ulaw"),
@@ -114,20 +120,20 @@ def _container_cases():
         ("wav_ima", wav.encode_wav(pcm, 8000, codec="ima"),
          wav.decode_wav),
         ("avi", avi.encode_avi_mjpeg([frame, frame // 2], 10),
-         avi.decode_avi_mjpeg),
+         avi.avi_info),
         ("pdf14", pdf.encode_pdf(["Hello fuzz world " * 40] * 3),
          pdf.decode_pdf_text),
         ("pdf15", pdf.encode_pdf(["Object stream page " * 40] * 3,
                                  object_streams=True), pdf.decode_pdf_text),
         ("gif_anim",
-         gif.encode_gif_frames(
+         encode_gif_frames(
              [np.full((16, 16), i % 4, np.uint8) for i in range(3)],
              np.stack([np.arange(4) * 80] * 3, axis=1).astype(np.uint8),
          ),
          gif.decode_gif_frames),
         ("pdf_multipage",
-         pdf.encode_pdf_pages([["pg one text"], ["pg two text"],
-                               ["pg three"]], object_streams=True),
+         encode_pdf_pages([["pg one text"], ["pg two text"],
+                           ["pg three"]], object_streams=True),
          pdf.decode_pdf_text_pages),
     ]
 

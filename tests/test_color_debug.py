@@ -9,121 +9,6 @@ from granulate_char_ocr_spark.sources.synthetic import render_word
 
 
 # ---------------------------------------------------------------------------
-# HSV / Lab
-# ---------------------------------------------------------------------------
-
-
-def _px(b, g, r):
-    return np.array([[[b, g, r]]], dtype=np.uint8)
-
-
-def test_bgr_to_hsv_primaries():
-    # cv2 8-bit convention: H in [0,180)
-    assert kernels.bgr_to_hsv(_px(255, 0, 0))[0, 0].tolist() == [120, 255, 255]
-    assert kernels.bgr_to_hsv(_px(0, 255, 0))[0, 0].tolist() == [60, 255, 255]
-    assert kernels.bgr_to_hsv(_px(0, 0, 255))[0, 0].tolist() == [0, 255, 255]
-    assert kernels.bgr_to_hsv(_px(255, 0, 255))[0, 0].tolist() == [150, 255, 255]
-    assert kernels.bgr_to_hsv(_px(255, 255, 255))[0, 0].tolist() == [0, 0, 255]
-    assert kernels.bgr_to_hsv(_px(0, 0, 0))[0, 0].tolist() == [0, 0, 0]
-    assert kernels.bgr_to_hsv(_px(128, 128, 128))[0, 0, 1] == 0  # gray: S=0
-
-
-def test_bgr_to_lab_anchors():
-    # white -> (255, 128, 128), black -> (0, 128, 128) in cv2 8-bit packing
-    assert kernels.bgr_to_lab(_px(255, 255, 255))[0, 0].tolist() == [255, 128, 128]
-    assert kernels.bgr_to_lab(_px(0, 0, 0))[0, 0].tolist() == [0, 128, 128]
-    # pure red: L*~53.2, a*~80.1, b*~67.2 (D65) -> packed ~(136, 208, 195)
-    L, a, b = kernels.bgr_to_lab(_px(0, 0, 255))[0, 0].tolist()
-    assert abs(L - 136) <= 2 and abs(a - 208) <= 2 and abs(b - 195) <= 2
-
-
-# ---------------------------------------------------------------------------
-# purple-ratio / circularity region filters
-# ---------------------------------------------------------------------------
-
-
-def test_purple_filter_keeps_only_purple_regions():
-    img = np.zeros((20, 40, 3), dtype=np.uint8)
-    img[2:18, 2:18] = (255, 0, 255)  # magenta: H=150, inside [120,180]
-    img[2:18, 22:38] = (0, 255, 0)  # green: rejected
-    regions = [(2, 2, 16, 16), (22, 2, 16, 16)]
-    assert kernels.filter_purple_regions(img, regions) == [(2, 2, 16, 16)]
-    assert kernels.purple_ratio(img[2:18, 2:18]) == 1.0
-    assert kernels.purple_ratio(img[2:18, 22:38]) == 0.0
-
-
-def _disc(r=20):
-    yy, xx = np.mgrid[-r : r + 1, -r : r + 1]
-    return ((yy**2 + xx**2) <= r * r).astype(np.uint8) * 255
-
-
-def test_circularity_gate():
-    disc = _disc(20)
-    assert kernels.region_circularity(disc) > 0.4
-    line = np.zeros((41, 41), dtype=np.uint8)
-    np.fill_diagonal(line, 255)
-    assert kernels.region_circularity(line) < 0.4
-    # square-ish disc bbox passes; a wide bar fails the aspect gate
-    binary = np.zeros((60, 120), dtype=np.uint8)
-    binary[5:46, 5:46] = disc
-    binary[50:58, 5:115] = 255  # 110x8 bar
-    regions = [(5, 5, 41, 41), (5, 50, 110, 8)]
-    assert kernels.filter_circular_regions(binary, regions) == [(5, 5, 41, 41)]
-
-
-def test_empty_crops_score_zero():
-    assert kernels.region_circularity(np.zeros((5, 5), dtype=np.uint8)) == 0.0
-    assert kernels.purple_ratio(np.zeros((0, 0, 3), dtype=np.uint8)) == 0.0
-
-
-# ---------------------------------------------------------------------------
-# bilateral / CLAHE (F2/F3 — functional reproductions of the reference's
-# cv2.bilateralFilter(9,75,75) + createCLAHE(2.0, 8x8) chain)
-# ---------------------------------------------------------------------------
-
-
-def test_bilateral_preserves_edges_kills_gaussian_noise():
-    edge = np.zeros((20, 20), dtype=np.uint8)
-    edge[:, 10:] = 255
-    bf = kernels.bilateral_filter(edge)
-    gf = kernels.gaussian_blur3(edge)
-    # edge-preserving: the step stays near-vertical where a Gaussian smears
-    assert int(bf[10, 10]) - int(bf[10, 9]) > int(gf[10, 10]) - int(gf[10, 9])
-    # identity on constant regions
-    const = np.full((16, 16), 77, dtype=np.uint8)
-    assert np.array_equal(kernels.bilateral_filter(const), const)
-    # smooths small-amplitude noise
-    rng = np.random.default_rng(2)
-    noisy = np.clip(100 + rng.normal(0, 8, (32, 32)), 0, 255).astype(np.uint8)
-    assert kernels.bilateral_filter(noisy).std() < noisy.std() / 2
-
-
-def test_clahe_expands_local_contrast_monotonically():
-    rng = np.random.default_rng(1)
-    lo = rng.integers(100, 121, (64, 64), dtype=np.uint8)  # low contrast
-    ce = kernels.clahe(lo)
-    assert int(ce.max()) - int(ce.min()) > 2 * (int(lo.max()) - int(lo.min()))
-    # with a single tile (no bilinear blend) the mapping is one CDF LUT →
-    # strictly order-preserving
-    one = kernels.clahe(lo, tiles=1)
-    order = np.argsort(lo.reshape(-1), kind="stable")
-    assert (np.diff(one.reshape(-1)[order].astype(int)) >= 0).all()
-
-
-def test_reference_preprocess_chain_recognizes_clean_fixtures():
-    """grayscale → bilateral → CLAHE → threshold → close (the reference's
-    literal ocr_service.py:176-199 chain) recognizes the golden vocabulary —
-    on clean fixtures even via exact_hash."""
-    for w in ("TEAM", "PLEASURE", "WE"):
-        pre = kernels.preprocess_reference(render_word(w, 0))
-        regions = kernels.segment_regions(pre)
-        crops = [pre[y : y + h, x : x + wd] for (x, y, wd, h) in regions]
-        results = kernels.classify_batch(crops)
-        assert "".join(r[0] for r in results) == w
-        assert all(r[2] == "exact_hash" for r in results)
-
-
-# ---------------------------------------------------------------------------
 # debug image sink
 # ---------------------------------------------------------------------------
 

@@ -156,18 +156,16 @@ def test_multiprobe_recall_at_least_single_probe(spark):
 def test_hash_sample_partitioning_invariant(spark):
     """The sample decision depends only on the key: any repartitioning
     selects the identical row set (RNG sample() cannot promise this)."""
-    from granulate_char_ocr_spark.operators.sampling import (
-        hash_sample,
-        stratified_sample,
-    )
+    from granulate_char_ocr_spark.operators.sampling import stratified_sample
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {r["doc_id"] for r in hash_sample(docs, "doc_id", 10).collect()}
-    b = {
-        r["doc_id"]
-        for r in hash_sample(docs.repartition(17, "lang"), "doc_id", 10).collect()
-    }
-    assert a == b and 0 < len(a) < docs.count()
+
+    def kept(df):
+        s = stratified_sample(df, "doc_id", "lang", {}, default_pct=10)
+        return {r["doc_id"] for r in s.collect()}
+
+    a = kept(docs)
+    assert a == kept(docs.repartition(17, "lang")) and 0 < len(a) < docs.count()
     s = stratified_sample(docs, "doc_id", "lang", {"en": 0}, default_pct=100)
     langs = {r["lang"] for r in s.select("lang").distinct().collect()}
     assert "en" not in langs and len(langs) >= 2
@@ -324,91 +322,6 @@ def test_duplicated_passage_duckdb_parity(spark):
     }
     assert got == want
     assert sum(v[1] for v in got.values()) > 0
-
-
-# ----------------------------------------------- ExactSubstr removal
-
-
-def test_remove_duplicated_passages_semantics(spark):
-    from granulate_char_ocr_spark.operators.dedup import (
-        remove_duplicated_passages,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),          # first occurrence: untouched
-            (2, "x a b c d y"),        # repeats two windows from doc 1
-            (3, "p q r s p q r s"),    # repeats its own prefix
-            (4, "lone words only"),    # no duplicated window anywhere
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicated_passages(docs, n=3).collect()
-    }
-    assert got[1] == ("a b c d e", 5, 0)
-    # windows at pos 1 and 2 are dups -> tokens [1,5) go, 'x y' stays
-    assert got[2] == ("x y", 6, 4)
-    # second 'p q r'/'q r s' at pos 4/5 -> suffix [4,8) removed
-    assert got[3] == ("p q r s", 8, 4)
-    assert got[4] == ("lone words only", 3, 0)
-
-
-def test_remove_duplicated_passages_duckdb_parity(spark):
-    import duckdb
-
-    from granulate_char_ocr_spark.operators.dedup import (
-        remove_duplicated_passages,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicated_passages(docs, n=3).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.execute(
-            """
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents),
-        gw AS (SELECT doc_id,
-                 unnest(CASE WHEN len(toks) >= 3 THEN
-                   list_transform(range(0, len(toks) - 2),
-                     i -> {'pos': i,
-                           'g': array_to_string(
-                                  list_slice(toks, i+1, i+3), ' ')})
-                   ELSE [] END) AS w
-               FROM t),
-        g AS (SELECT doc_id, w['pos'] AS pos, w['g'] AS g FROM gw),
-        r AS (SELECT doc_id, pos,
-                row_number() OVER (PARTITION BY g
-                                   ORDER BY doc_id, pos) AS rn
-              FROM g),
-        s AS (SELECT doc_id, list_sort(list(pos)) AS starts
-              FROM r WHERE rn > 1 GROUP BY 1),
-        k AS (SELECT t.doc_id, t.toks,
-                list_filter(range(0, len(t.toks)),
-                  i -> len(list_filter(coalesce(s.starts, []),
-                        p -> p <= i AND i < p + 3)) = 0) AS kept
-              FROM t LEFT JOIN s USING (doc_id))
-        SELECT doc_id,
-               coalesce(array_to_string(
-                 list_transform(kept, i -> toks[i + 1]), ' '), '') AS text,
-               CAST(len(toks) AS INT) AS n_tokens,
-               CAST(len(toks) - len(kept) AS INT) AS n_removed
-        FROM k
-        """
-        ).fetchall()
-    }
-    assert got == want
-    assert sum(v[2] for v in got.values()) > 0
 
 
 # ----------------------------------------------- temperature resampling

@@ -156,7 +156,13 @@ def test_pdf_text_containing_operator_lookalikes():
 def test_pdf_invalid_octal_escape_tolerated():
     """Review fix: \\8 and \\9 are not octal; the spec says unknown
     escapes pass the character through, not crash."""
-    from granulate_char_ocr_spark.functions.pdf import _decode_pdf_string
+    from granulate_char_ocr_spark.functions.pdf import (
+        _pdf_text,
+        _unescape_pdf_string,
+    )
+
+    def _decode_pdf_string(raw: bytes) -> str:
+        return _pdf_text(_unescape_pdf_string(raw))
 
     assert _decode_pdf_string(rb"a\8b") == "a8b"
     assert _decode_pdf_string(rb"a\101b") == "aAb"  # real octal still works
@@ -209,43 +215,6 @@ def test_pdf_15_object_stream_roundtrip():
     assert decode_pdf_text(encode_pdf(lines)) == "\n".join(lines)
 
 
-def test_pdf_15_xref_stream_entries():
-    """The /XRef stream decodes to the exact entry table the writer laid
-    down (W [1 2 2], /Index [0 9], Predictor 12)."""
-    import re
-
-    from granulate_char_ocr_spark.functions.pdf import (
-        _STREAM_RE,
-        expand_object_streams,
-        parse_xref_stream,
-    )
-
-    data = encode_pdf(["xref entries"], object_streams=True)
-    entries = None
-    for m in _STREAM_RE.finditer(data):
-        d = m.group("dict")
-        if re.search(rb"/Type\s*/XRef\b", d):
-            lm = re.search(rb"/Length\s+(\d+)(?![0-9])", d)
-            body = data[m.start("body") : m.start("body") + int(lm.group(1))]
-            import zlib
-
-            entries = parse_xref_stream(d, zlib.decompress(body))
-    assert entries is not None
-    assert entries[0] == (0, 0, 0xFFFF)
-    # objects 1-4 and 8 live in ObjStm 6 at indices 0-3 and 4
-    assert all(entries[i] == (2, 6, i - 1) for i in range(1, 5))
-    assert entries[8] == (2, 6, 4)
-    # type-1 offsets actually point at their objects
-    for num in (5, 6, 7):
-        t, off, _ = entries[num]
-        assert t == 1
-        assert data[off:].startswith(b"%d 0 obj" % num)
-    # and the ObjStm expansion surfaces the packed catalog + length int
-    objs = expand_object_streams(data)
-    assert b"/Catalog" in objs[1]
-    assert objs[8].isdigit()
-
-
 def test_pdf_15_large_file_offsets():
     """Review fix r4: xref-stream offsets are 4-byte (W [1 4 2]) — a
     >64 KiB file must round-trip, not crash the 2-byte packer."""
@@ -260,46 +229,6 @@ def test_pdf_15_large_file_offsets():
     assert decode_pdf_text(data) == "\n".join(lines)
 
 
-def test_pdf_pages_operator(spark):
-    """1→N page explode: per-page rows in document order, and the joined
-    pages equal pdf_texts' concatenated output exactly."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.functions.pdf import (
-        decode_pdf_text_pages,
-        encode_pdf_pages,
-    )
-    from granulate_char_ocr_spark.operators.docparse import pdf_pages, pdf_texts
-
-    docs = {
-        "d0": ["first page words", "second page words", "third"],
-        "d1": ["only page"],
-        "d2": ["obj stream pg 1", "obj stream pg 2"],
-    }
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(docs),
-            "payload": [
-                encode_pdf_pages(
-                    [[line] for line in pages],
-                    object_streams=(k == "d2"),
-                )
-                for k, pages in docs.items()
-            ],
-        }
-    )
-    df = spark.createDataFrame(pdf, "doc_id string, payload binary")
-    rows = pdf_pages(df).collect()
-    got: dict[str, dict[int, str]] = {}
-    for r in rows:
-        got.setdefault(r["doc_id"], {})[r["page_no"]] = r["page_text"]
-    assert {k: [v[i] for i in sorted(v)] for k, v in got.items()} == docs
-    # python twin parity: joined pages == whole-doc extraction
-    flat = {r["doc_id"]: r["extracted"] for r in pdf_texts(df).collect()}
-    for k, pages in docs.items():
-        assert "\n".join(decode_pdf_text_pages(bytes(pdf.set_index("doc_id").loc[k, "payload"]))) == flat[k]
-
-
 def test_pdf_pages_skip_textless_streams():
     """Review fix: a BT/ET block with no text operators is not a page —
     page join stays exactly equal to whole-document extraction."""
@@ -308,8 +237,8 @@ def test_pdf_pages_skip_textless_streams():
     from granulate_char_ocr_spark.functions.pdf import (
         decode_pdf_text,
         decode_pdf_text_pages,
-        encode_pdf_pages,
     )
+    from encoders import encode_pdf_pages
 
     data = encode_pdf_pages([["page one"], ["page two"]])
     # graft a text-less BT/ET stream object between the pages

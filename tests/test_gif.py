@@ -182,8 +182,8 @@ def test_gif_animation_roundtrip():
         decode_gif,
         decode_gif_frames,
         encode_gif,
-        encode_gif_frames,
     )
+    from encoders import encode_gif_frames
 
     rng = np.random.default_rng(8)
     pal = np.stack([np.arange(16) * 17] * 3, axis=1).astype(np.uint8)
@@ -201,10 +201,8 @@ def test_gif_animation_roundtrip():
 def test_gif_animation_transparency_is_compositing_hole():
     """In animation composition a transparent index keeps the underlying
     canvas pixel (it is NOT an alpha channel on the output frame)."""
-    from granulate_char_ocr_spark.functions.gif import (
-        decode_gif_frames,
-        encode_gif_frames,
-    )
+    from granulate_char_ocr_spark.functions.gif import decode_gif_frames
+    from encoders import encode_gif_frames
 
     pal = np.stack([np.arange(16) * 17] * 3, axis=1).astype(np.uint8)
     f0 = np.zeros((10, 10), np.uint8)
@@ -320,9 +318,9 @@ def test_gif_frame_iterator_matches_list():
     list wrapper is exactly equal."""
     from granulate_char_ocr_spark.functions.gif import (
         decode_gif_frames,
-        encode_gif_frames,
         iter_gif_frames,
     )
+    from encoders import encode_gif_frames
 
     pal = np.stack([np.arange(8) * 32] * 3, axis=1).astype(np.uint8)
     frames = [np.full((9, 7), i % 8, np.uint8) for i in range(4)]

@@ -265,7 +265,7 @@ def test_restart_stream_missing_segment_rejected():
 # progressive (SOF2)
 # --------------------------------------------------------------------------
 
-from granulate_char_ocr_spark.functions.jpeg import encode_jpeg_progressive
+from encoders import encode_jpeg_progressive
 
 
 def _prog_case(shape, sub):

@@ -59,14 +59,6 @@ def test_adaptive_threshold_local_contrast():
     assert out[10, 6] == 255 and out[10, 31] == 255
 
 
-def test_morph_open_removes_speck():
-    img = np.zeros((12, 12), dtype=np.uint8)
-    img[2:7, 2:7] = 255
-    img[9, 9] = 255  # isolated interior speck
-    out = kernels.morph_open(img, 2, 2)
-    assert out[9, 9] == 0 and out[4, 4] == 255
-
-
 def test_fast_morphology_matches_generic_pool():
     rng = np.random.default_rng(0)
     img = (rng.random((30, 50)) > 0.5).astype(np.uint8) * 255
@@ -245,13 +237,6 @@ def test_recognize_word_end_to_end():
     assert all(c["method"] == "exact_hash" and c["confidence"] == 1.0 for c in chars)
     xs = [c["x"] for c in chars]
     assert xs == sorted(xs)
-
-
-def test_recognize_word_vote_majority():
-    from granulate_char_ocr_spark.sources.synthetic import render_word
-
-    # on clean fixtures all three binarizations agree → unanimous vote
-    assert kernels.recognize_word_vote(render_word("OPERATE", 0)) == "OPERATE"
 
 
 def test_deskew_recovers_rotated_word():

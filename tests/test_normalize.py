@@ -1,6 +1,10 @@
 """Pin the equality of the Spark normalization path and its Python twin
 (the fixture generator depends on it — FIXTURES.md §5 invariant)."""
 
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.functions.text import normalize_expr, normalize_python
@@ -44,3 +48,33 @@ def test_spark_matches_python(spark):
     }
     for i, c in enumerate(CASES):
         assert got[i] == normalize_python(c), repr(c)
+
+
+_TWO_SESSIONS = """
+from pyspark.sql import functions as F
+from granulate_char_ocr_spark.functions.text import normalize_expr
+from granulate_char_ocr_spark.session import get_spark
+
+for _ in range(2):
+    spark = get_spark(master="local[2]", shuffle_partitions=2)
+    df = spark.createDataFrame([("café",)], "t string")
+    assert df.select(normalize_expr(F.col("t"))).collect()[0][0] == "CAFÉ"
+    spark.stop()
+"""
+
+
+def test_nfc_udf_survives_session_restart():
+    """The NFC UDF must be rebuilt for each SparkContext: one cached under a
+    stopped context makes every task of the next session log a failed
+    accumulator update."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "Failed to update accumulator" not in proc.stderr

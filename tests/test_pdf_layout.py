@@ -9,12 +9,12 @@ operator."""
 import zlib
 
 import pytest
+from encoders import encode_pdf_cid
 
 from granulate_char_ocr_spark.functions import pdf
 from granulate_char_ocr_spark.functions.pdf import (
     _assemble_single,
     decode_pdf_layout_pages,
-    decode_pdf_runs,
     decode_pdf_text,
     decode_pdf_text_layout,
     encode_pdf,
@@ -42,12 +42,6 @@ def test_two_columns_reading_order(objstm):
     data = encode_pdf_runs(TWO_COL, object_streams=objstm)
     assert decode_pdf_text_layout(data) == TWO_COL_READING
     assert decode_pdf_text(data) == "".join(t for _, _, t in TWO_COL)
-
-
-def test_runs_roundtrip_positions():
-    """decode_pdf_runs returns each show's absolute (x, y, text) in draw
-    order — the writer's Tm coordinates verbatim."""
-    assert decode_pdf_runs(encode_pdf_runs(TWO_COL)) == TWO_COL
 
 
 def test_single_column_matches_draw_order():
@@ -170,7 +164,7 @@ def test_cid_font_roundtrip_all_paths():
         "naïve — café €2 中文 😀",  # BMP + supplementary plane
         "ligature ﬃ expands",
     ]
-    blob = pdf.encode_pdf_cid(lines)
+    blob = encode_pdf_cid(lines)
     want = "\n".join(lines)
     assert pdf.decode_pdf_text(blob) == want
     assert pdf.decode_pdf_text_layout(blob) == want
@@ -322,7 +316,7 @@ def test_mixed_fonts_cmap_and_plain():
 def test_tounicode_writer_emits_bfranges():
     # consecutive alphabet → the writer must use the bfrange form (the
     # reader's range path is then under the round-trip, not just bfchar)
-    blob = pdf.encode_pdf_cid(["abcdefgh", "XYZ"])
+    blob = encode_pdf_cid(["abcdefgh", "XYZ"])
     # find + inflate the CMap stream and check its shape
     import re
     import zlib

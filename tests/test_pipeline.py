@@ -65,24 +65,6 @@ def test_heavy_doc_extracted(spark, corpus):
     assert [tuple(s) for s in row["spans"]] == [tuple(s) for s in exp["spans"]]
 
 
-def test_keep_empty_docs_parity(spark, corpus):
-    docs, media, _ = corpus
-    import pyspark.sql.functions as SF
-
-    with_empty = docs.union(
-        spark.createDataFrame(
-            [("doc_empty", [])],
-            docs.schema,
-        )
-    )
-    default = extract_documents(with_empty, media)
-    assert default.filter(SF.col("doc_id") == "doc_empty").count() == 0
-    kept = extract_documents(with_empty, media, keep_empty_docs=True)
-    assert kept.count() == N_DOCS + 1
-    [r] = kept.filter(SF.col("doc_id") == "doc_empty").collect()
-    assert r["spans"] == []
-
-
 def test_evaluate_metrics_all_perfect(spark, corpus):
     docs, media, expected = corpus
     extracted = extract_documents(docs, media)

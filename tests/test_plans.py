@@ -181,56 +181,6 @@ def test_kernel_stage_exchange_has_explicit_partition_count(spark, corpus):
     assert str(want) in counts, (want, counts)
 
 
-def test_sorted_unique_event_types(spark):
-    """O5 (left the 50-entry gate for mm_audio_features in r4): distinct +
-    order over events, checked against DuckDB."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = [
-        r["event_type"]
-        for r in driver_queries.sorted_unique_event_types(spark, sf).collect()
-    ]
-    want = [
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT DISTINCT event_type FROM '{sf}/events.parquet' "
-            "ORDER BY event_type"
-        ).fetchall()
-    ]
-    assert got == want
-
-
-def test_customer_order_distribution(spark):
-    """TPC-H q13 shape (left the 50-entry gate for html_main_content_docs
-    in r4): outer join preserving empty groups + two-level aggregate,
-    checked against DuckDB."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["n_orders"], r["n_customers"])
-        for r in driver_queries.customer_order_distribution(
-            spark, sf
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in duckdb.sql(
-            "SELECT n_orders, count(*) AS n_customers FROM ("
-            "  SELECT c.c_custkey, count(o.o_orderkey) AS n_orders"
-            f"  FROM '{sf}/customer.parquet' c"
-            f"  LEFT JOIN '{sf}/orders.parquet' o"
-            "   ON c.c_custkey = o.o_custkey GROUP BY 1) t GROUP BY 1"
-        ).fetchall()
-    }
-    assert got == want
-
-
 def test_percentile_order_prices(spark):
     """Interpolated percentiles (left the 50-entry gate for
     repetition_signals_docs in r4): Spark `percentile` must equal DuckDB
@@ -553,41 +503,3 @@ def test_semi_join_active_customers(spark):
         for r in con.execute(driver_queries.SEMI_JOIN_ORACLE).fetchall()
     }
     assert got == want
-
-
-# --- sentence segmentation -------------------------------------------------
-
-
-def test_explode_sentences_twin_and_corners(spark):
-    from granulate_char_ocr_spark.operators.textstats import (
-        explode_sentences,
-        split_sentences_python,
-    )
-
-    texts = [
-        'First sentence. Second one! Third? "Quoted start." And more.',
-        "No terminal punctuation here",
-        "Decimals like 3.14 stay. Numbers 42 open sentences.",
-        "Trailing spaces.   Next sentence.",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    out = explode_sentences(df).collect()
-    got = {}
-    for r in out:
-        got.setdefault(r.doc_id, []).append((r.sent_idx, r.sentence))
-    for i, t in enumerate(texts):
-        want = split_sentences_python(t)
-        have = [s for _, s in sorted(got.get(i, []))]
-        assert have == want, (i, have, want)
-    # corners pinned concretely
-    assert [s for _, s in sorted(got[0])][0] == "First sentence."
-    assert len(got[0]) == 5
-    assert len(got[1]) == 1
-    assert [s for _, s in sorted(got[2])] == [
-        "Decimals like 3.14 stay.",
-        "Numbers 42 open sentences.",
-    ]
-    assert 4 not in got  # empty text yields no rows

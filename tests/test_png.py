@@ -135,7 +135,7 @@ def test_png_media_embeddings_match_raw(spark):
 @pytest.mark.parametrize("depth", [1, 2, 4, 8])
 @pytest.mark.parametrize("ftype", [0, 1, 4])
 def test_roundtrip_palette_depths(depth, ftype):
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from encoders import encode_png_palette
 
     n_colors = 1 << depth
     rng = np.random.default_rng(3)
@@ -146,7 +146,7 @@ def test_roundtrip_palette_depths(depth, ftype):
 
 
 def test_roundtrip_palette_trns_alpha():
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from encoders import encode_png_palette
 
     palette = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8)
     trns = np.array([0, 128], dtype=np.uint8)  # entry 2 defaults to 255
@@ -162,7 +162,7 @@ def test_palette_through_image_embeddings(spark):
     sniffing multimodal path and embeds identically to the raw glyph."""
     import pandas as pd
 
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from encoders import encode_png_palette
     from granulate_char_ocr_spark.operators import multimodal
 
     glyph = render_word("LAB", 0)  # values are 0/255 → a 2-color palette
@@ -223,10 +223,7 @@ def test_sub_heavy_decode_is_vectorized():
 def test_image_corpus_case_insensitive_labels_and_error_summary(spark, tmp_path):
     """ADVICE r2: uppercase/mixed-case extensions must still label, and
     mass decode failure must be one grouped count away."""
-    from granulate_char_ocr_spark.sources.binary_files import (
-        decode_error_summary,
-        read_image_corpus,
-    )
+    from granulate_char_ocr_spark.sources.binary_files import read_image_corpus
 
     (tmp_path / "team_1.PNG").write_bytes(encode_png(render_word("TEAM", 0)))
     (tmp_path / "We_2.Png").write_bytes(encode_png(render_word("WE", 1)))
@@ -235,8 +232,8 @@ def test_image_corpus_case_insensitive_labels_and_error_summary(spark, tmp_path)
     rows = {r["path"].rsplit("/", 1)[-1]: r for r in corpus.collect()}
     assert rows["team_1.PNG"]["expected"] == "TEAM"
     assert rows["We_2.Png"]["expected"] == "WE"
-    summary = decode_error_summary(corpus).collect()
-    by_err = {r["decode_error"]: r["n"] for r in summary}
+    summary = corpus.groupBy("decode_error").count().collect()
+    by_err = {r["decode_error"]: r["count"] for r in summary}
     assert by_err[None] == 2
     assert sum(n for e, n in by_err.items() if e is not None) == 1
 
@@ -281,7 +278,7 @@ def test_16bit_roundtrip(interlace):
 
 
 def test_palette_adam7_with_trns():
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from encoders import encode_png_palette
 
     rng = np.random.default_rng(9)
     pal = rng.integers(0, 256, (3, 3), dtype=np.uint8)
@@ -300,7 +297,11 @@ def test_subbyte_grayscale_scales_to_full_range():
     import zlib
 
     from granulate_char_ocr_spark.functions.png import (
-        _SIGNATURE, _chunk, _filter_rows, _pack_subbyte)
+        _SIGNATURE,
+        _chunk,
+        _filter_rows,
+    )
+    from encoders import _pack_subbyte
 
     rng = np.random.default_rng(3)
     for d in (1, 2, 4):

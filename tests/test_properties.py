@@ -184,8 +184,8 @@ def test_jpeg_progressive_equals_baseline_property(
     from granulate_char_ocr_spark.functions.jpeg import (
         decode_jpeg,
         encode_jpeg,
-        encode_jpeg_progressive,
     )
+    from encoders import encode_jpeg_progressive
 
     shape = (h, w) if gray else (h, w, 3)
     img = np.random.default_rng(seed).integers(0, 256, shape, dtype=np.uint8)

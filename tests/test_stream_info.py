@@ -304,9 +304,7 @@ def test_image_geometry_jpeg_fill_bytes_and_standalone_markers():
 def test_audio_features_null_payload_zero_duration(spark):
     import pandas as pd
 
-    from granulate_char_ocr_spark.operators.multimodal import (
-        audio_features, audio_segments,
-    )
+    from granulate_char_ocr_spark.operators.multimodal import audio_features
 
     audio = spark.createDataFrame(
         pd.DataFrame({
@@ -318,4 +316,3 @@ def test_audio_features_null_payload_zero_duration(spark):
     )
     rows = audio_features(audio).collect()
     assert len(rows) == 1 and rows[0]["duration_sec"] == 0.0
-    assert audio_segments(audio).collect() == []

@@ -292,10 +292,8 @@ def test_tiff_multipage_roundtrip():
     pointer — the fax/scanned-document convention) round-trips for
     gray and bilevel compressions, and the single-page writer output
     is byte-identical to a 1-page chain."""
-    from granulate_char_ocr_spark.functions.tiff import (
-        decode_tiff_pages,
-        encode_tiff_multipage,
-    )
+    from granulate_char_ocr_spark.functions.tiff import decode_tiff_pages
+    from encoders import encode_tiff_multipage
 
     rng = np.random.default_rng(2)
     pages = [
@@ -322,10 +320,8 @@ def test_tiff_multipage_roundtrip():
 
 def test_tiff_multipage_chain_guards():
     """A corrupt next-IFD pointer forming a cycle must raise, not loop."""
-    from granulate_char_ocr_spark.functions.tiff import (
-        decode_tiff_pages,
-        encode_tiff_multipage,
-    )
+    from granulate_char_ocr_spark.functions.tiff import decode_tiff_pages
+    from encoders import encode_tiff_multipage
     import struct
 
     img = np.full((8, 8), 200, np.uint8)
