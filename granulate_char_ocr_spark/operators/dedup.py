@@ -24,6 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from granulate_char_ocr_spark.operators.skew import (
+    EMBEDDING_PAIR_S,
+    NGRAM_DOC_S,
+    kernel_partitions,
+)
+
+
 def TOKENS():
     # built lazily: Column construction needs an active SparkContext
     return F.split(F.col("text"), " ")
@@ -277,10 +284,10 @@ def ngram_jaccard_pairs(
     import pandas as pd
 
     spark = docs.sparkSession
-    # P = cores measured best (A/B P in {16,32,64} at sf1.0: the index
-    # payload ships once per slice, so transfer grows linearly in P while
-    # the vectorized kernel splits fine at one slice per core)
-    P = n_slices or max(16, spark.sparkContext.defaultParallelism)
+    # the index payload ships to, and is unpacked in, every slice, so the
+    # fewest slices that the work fills win (A/B at sf0.1 on 4 cores:
+    # P = 16/4/1 took 2.6/1.6/1.5 s)
+    P = n_slices or kernel_partitions(docs, NGRAM_DOC_S)
     sh = _shingles_kernel(docs, n)
     by = (
         sh.groupBy("shingle")
@@ -546,22 +553,25 @@ def embedding_near_pairs(
     Decimal(shortest-repr) HALF_UP — Spark's BigDecimal.valueOf round —
     on the few survivors.
 
-    Scale shape: the block-pair relation has nb(nb+1)/2 rows; each task
-    is one bounded block pair (work N^2 d / nb^2, accumulator tiled to
-    ~4 MB), so nb grows with the corpus to keep tasks constant-cost.
-    Only block KEYS shuffle (the fat vector arrays ride one broadcast
-    per side); past broadcastable corpus size, shard by IVF cell first
-    and run the kernel per shard — the quadratic candidate set is
-    inherent to the pinned 4-bit quantizer, not to this execution.
+    Scale shape: the block-pair relation has nb(nb+1)/2 rows, dealt
+    round-robin to the stage's skew.kernel_partitions tasks, one block per
+    task by default: each task evaluates about (nb+1)/2 block pairs (work
+    N^2 d / 2nb, accumulator tiled to ~4 MB), and nb grows with the corpus
+    up to the rule's cap. Only block KEYS shuffle (the fat vector arrays
+    ride one broadcast per side); past broadcastable corpus size, shard by
+    IVF cell first and run the kernel per shard — the quadratic candidate
+    set is inherent to the pinned 4-bit quantizer, not to this execution.
     """
     import numpy as np
     import pandas as pd
 
     spark = embeddings.sparkSession
-    # nb = cores measured best at 32 cores (A/B nb in {16,32,48,64}:
-    # 5.7/4.0/4.6/5.0 s at sf1.0) — fewer blocks save Arrow transfer but
-    # the fatter tasks straggle; more blocks pay linear transfer growth.
-    nb = n_blocks or max(16, spark.sparkContext.defaultParallelism)
+    # one block per task: fewer blocks save Arrow transfer (each block
+    # pair ships both blocks), and nb(nb+1)/2 block pairs dealt round-robin
+    # keep the tasks even (A/B at sf0.1 on 4 cores: 16/4/1 blocks over
+    # nb*8 hash partitions took 9.3/2.5/1.4 s)
+    tasks = kernel_partitions(embeddings, EMBEDDING_PAIR_S, pairwise=True)
+    nb = n_blocks or tasks
     blocks = (
         embeddings.select("vec_id", "embedding")
         .withColumn("b", F.pmod(F.col("vec_id"), F.lit(nb)).cast("int"))
@@ -573,7 +583,7 @@ def embedding_near_pairs(
     )
     pairs = spark.createDataFrame(
         [(bl, br) for bl in range(nb) for br in range(bl, nb)], "bl int, br int"
-    ).repartition(nb * 8, "bl", "br")
+    ).repartition(min(tasks, nb * (nb + 1) // 2))
     joined = pairs.join(
         F.broadcast(
             blocks.select(

@@ -30,6 +30,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from granulate_char_ocr_spark.functions import kernels
+from granulate_char_ocr_spark.operators.skew import (
+    DECODE_IMAGE_S,
+    kernel_partitions,
+)
 
 MULTIMODAL_SCHEMA = (
     "media_ref string, modality string, codec string, width int, height int, "
@@ -154,8 +158,9 @@ def decode_media_store(
     Without the explicit exchange the whole decode of a compressed store
     runs near-serial regardless of cluster size (measured: a 40 000-image
     scaling corpus spent ~14 s in a single decode task at every core
-    count). Default ``defaultParallelism × 4``; pass ``num_partitions=0``
-    to skip (e.g. an already well-partitioned input)."""
+    count). Default: skew.kernel_partitions over the store's rows; pass
+    ``num_partitions=0`` to skip (e.g. an already well-partitioned
+    input)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -195,9 +200,7 @@ def decode_media_store(
     cols = ["media_ref", "word", "width", "height", "pixels"]
     selected = media.select(*cols)
     if num_partitions is None:
-        num_partitions = (
-            media.sparkSession.sparkContext.defaultParallelism * 4
-        )
+        num_partitions = kernel_partitions(media, DECODE_IMAGE_S)
     if num_partitions:
         selected = selected.repartition(num_partitions)
     return selected.mapInPandas(fn, schema=MEDIA_STORE_SCHEMA)

@@ -9,12 +9,13 @@ Two recognition strategies, both Arrow-batched mapInPandas kernels:
 
 * ``dedup_media=True`` (default) — recognition is a pure function of the
   pixels, so classify each DISTINCT media_ref exactly once:
-  ``distinct(media_ref) → join media store → mapInPandas → join results back
-  to the span stream``. Pixel bytes never enter a span-stream shuffle — they
-  stay co-located with the media store — and media-heavy document skew is
-  structurally eliminated before the only Python stage (a hot doc's 50 spans
-  cost one dictionary hit each, not 50 decodes). This is the 100 TB posture:
-  content-keyed compute dedup, the span stream carries only strings.
+  ``repartition(media_ref) → distinct → join media store → mapInPandas →
+  join results back to the span stream``. Pixel bytes never enter a
+  span-stream shuffle — they stay co-located with the media store — and
+  media-heavy document skew is structurally eliminated before the only
+  Python stage (a hot doc's 50 spans cost one dictionary hit each, not 50
+  decodes). This is the 100 TB posture: content-keyed compute dedup, the
+  span stream carries only strings.
 * ``dedup_media=False`` — per-span extraction with explicit **doc_id-salted
   repartition** (operators/skew.py) before the kernel, for corpora whose
   media are predominantly unique (every span pays a decode; the salt spreads
@@ -24,9 +25,10 @@ Two recognition strategies, both Arrow-batched mapInPandas kernels:
 
 The span stream crosses exactly two exchanges either way: into the
 recognition join (or salted repartition) and out through the doc_id
-re-assembly. The media store / recognized-results join broadcasts when small
-and degrades to an AQE-skew-protected shuffle hash join on ``media_ref``
-otherwise.
+re-assembly. The kernel-stage exchange carries an explicit task count
+derived from the estimated work (operators/skew.kernel_partitions). The
+media store / recognized-results join broadcasts when small and degrades to
+an AQE-skew-protected shuffle hash join on ``media_ref`` otherwise.
 """
 
 from __future__ import annotations
@@ -43,7 +45,11 @@ from granulate_char_ocr_spark.operators.extract import (
     extract_media_spans,
     extract_unique_media,
 )
-from granulate_char_ocr_spark.operators.skew import salt_repartition
+from granulate_char_ocr_spark.operators.skew import (
+    OCR_IMAGE_S,
+    kernel_partitions,
+    salt_repartition,
+)
 from granulate_char_ocr_spark.operators.stitch import assemble_documents
 
 
@@ -59,20 +65,23 @@ def unique_media_repartitioned(
     media_side: DataFrame,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """distinct media_ref keys → EXPLICIT kernel-stage repartition → payload
-    join. The one place the partition policy for the extraction kernel
-    lives: the distinct output is key-only bytes, so AQE's bytes-based
-    sizing would coalesce the downstream pixel-UDF stage to ~1 partition
-    (the key-only-exchange blind spot) — hence cores × 4 unless overridden.
-    ``media_side`` should already be broadcast-wrapped when dim-sized."""
-    par = (
-        num_partitions
-        or media_refs.sparkSession.sparkContext.defaultParallelism * 4
-    )
+    """media_ref keys → EXPLICIT kernel-stage repartition → distinct →
+    payload join. The one place the partition policy for the extraction
+    kernel lives: ``num_partitions``, else skew.kernel_partitions over the
+    media store's rows (an upper bound on the distinct images).
+
+    The keys are repartitioned BEFORE the distinct. The other order puts a
+    user repartition over the aggregate's own hash exchange on media_ref;
+    at a count equal to spark.sql.shuffle.partitions the planner drops the
+    repartition as redundant, and AQE then coalesces the aggregate's
+    key-only exchange to ~1 partition (its bytes-based sizing cannot see
+    the pixel UDF downstream). ``media_side`` should already be
+    broadcast-wrapped when dim-sized."""
+    par = num_partitions or kernel_partitions(media_side, OCR_IMAGE_S)
     return (
         media_refs.select("media_ref")
-        .distinct()
         .repartition(par, "media_ref")
+        .distinct()
         .join(media_side, "media_ref", "left")
     )
 

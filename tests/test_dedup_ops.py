@@ -468,44 +468,54 @@ def test_embedding_near_pairs_blocked_kernel_equals_hof(spark):
     Catalyst float64 op order (sequential-sum dot and norms, BigDecimal
     HALF_UP rounding), so equality is exact, not approximate. Run at the
     gate operating point (rings=2) and at rings 1/3 so every graded ring
-    keeps the pin."""
+    keeps the pin, with the layout rule's block count (one block at this
+    size) and with 5 blocks (cross-block pairs)."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     for rings in (1, 2, 3):
-        new = sorted(
-            (r["vec_a"], r["vec_b"], r["sim"])
-            for r in dedup.embedding_near_pairs(
-                emb, threshold=0.4, probe_rings=rings
-            ).collect()
-        )
         ref = sorted(
             (r["vec_a"], r["vec_b"], r["sim"])
             for r in dedup._embedding_near_pairs_hof(
                 emb, threshold=0.4, probe_rings=rings
             ).collect()
         )
-        assert new == ref, f"rings={rings}: kernel diverged from HOF twin"
-        assert len(new) > 0, f"rings={rings}: vacuous comparison"
+        assert len(ref) > 0, f"rings={rings}: vacuous comparison"
+        for n_blocks in (None, 5):
+            new = sorted(
+                (r["vec_a"], r["vec_b"], r["sim"])
+                for r in dedup.embedding_near_pairs(
+                    emb, threshold=0.4, probe_rings=rings, n_blocks=n_blocks
+                ).collect()
+            )
+            assert new == ref, (
+                f"rings={rings} n_blocks={n_blocks}: kernel diverged from HOF twin"
+            )
 
 
 def test_ngram_jaccard_kernel_equals_joined(spark):
     """The r6 replicated-index pair kernel must emit the IDENTICAL pairs
     AND jaccards as the retained inverted-index self-join formulation
     (_ngram_jaccard_pairs_joined), on real data and at a threshold low
-    enough to emit plenty of rows."""
+    enough to emit plenty of rows, with the layout rule's slice count (one
+    slice at this size) and with 4 slices."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for thr in (0.5, 0.2):
-        new = sorted(
-            (r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in dedup.ngram_jaccard_pairs(docs, threshold=thr).collect()
-        )
         ref = sorted(
             (r["doc_a"], r["doc_b"], r["jaccard"])
             for r in dedup._ngram_jaccard_pairs_joined(
                 docs, threshold=thr
             ).collect()
         )
-        assert new == ref, f"thr={thr}: kernel diverged from join twin"
-        assert len(new) > 0, f"thr={thr}: vacuous comparison"
+        assert len(ref) > 0, f"thr={thr}: vacuous comparison"
+        for n_slices in (None, 4):
+            new = sorted(
+                (r["doc_a"], r["doc_b"], r["jaccard"])
+                for r in dedup.ngram_jaccard_pairs(
+                    docs, threshold=thr, n_slices=n_slices
+                ).collect()
+            )
+            assert new == ref, (
+                f"thr={thr} n_slices={n_slices}: kernel diverged from join twin"
+            )
 
 
 def test_minhash_signatures_kernel_equals_expr(spark):

@@ -161,12 +161,18 @@ def test_ascii_text_rows_normalize_without_python(spark):
 
 
 def test_kernel_stage_exchange_has_explicit_partition_count(spark, corpus):
-    """The extraction kernel's input exchange must carry the EXPLICIT
-    cores x 4 partition count (a plain key-only exchange would be coalesced
-    to ~1 partition by AQE's bytes-based sizing, serializing the pixel-UDF
-    stage — CLAUDE.md gotcha, pinned here at the plan level)."""
+    """The extraction kernel's input exchange must carry the EXPLICIT count
+    of the layout rule (skew.kernel_partitions), as a user repartition
+    (REPARTITION_BY_NUM), which AQE never coalesces. A key-only exchange
+    that AQE may size (ENSURE_REQUIREMENTS) would be coalesced to ~1
+    partition by its bytes-based sizing, serializing the pixel-UDF stage —
+    CLAUDE.md gotcha, pinned here at the plan level."""
     import re
 
+    from granulate_char_ocr_spark.operators.skew import (
+        OCR_IMAGE_S,
+        kernel_partitions,
+    )
     from granulate_char_ocr_spark.plans.pipeline import extract_flat
 
     docs, media = corpus
@@ -176,9 +182,14 @@ def test_kernel_stage_exchange_has_explicit_partition_count(spark, corpus):
         .executedPlan()
         .toString()
     )
-    want = spark.sparkContext.defaultParallelism * 4
-    counts = re.findall(r"hashpartitioning\(media_ref[^)]*, (\d+)\)", plan)
-    assert str(want) in counts, (want, counts)
+    want = kernel_partitions(F.broadcast(media), OCR_IMAGE_S)
+    exchanges = re.findall(
+        r"Exchange hashpartitioning\(media_ref#\d+, (\d+)\), (\w+)", plan
+    )
+    assert (str(want), "REPARTITION_BY_NUM") in exchanges, (want, exchanges)
+    assert all(origin == "REPARTITION_BY_NUM" for _, origin in exchanges), (
+        exchanges
+    )
 
 
 def test_percentile_order_prices(spark):
